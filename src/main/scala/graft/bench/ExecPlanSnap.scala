@@ -1,9 +1,12 @@
 package graft.bench
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 import org.apache.spark.sql.util.QueryExecutionListener
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 
 /** Captures the `.explain("formatted")` output of EVERY plan a query
   * EXECUTES while it is built and run — including the eager
@@ -52,16 +55,34 @@ object ExecPlanSnap {
           buf.append(qe.explainString(org.apache.spark.sql.execution.FormattedMode))
           buf.append('\n')
         }
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        buf.synchronized {
+          n += 1
+          buf.append(s"==== execution $n FAILED: action=$funcName ====\n")
+          buf.append(Option(e.getMessage).getOrElse(e.getClass.getName))
+          buf.append('\n')
+        }
     }
     spark.listenerManager.register(listener)
+    // every SQL execution the listener bus has ended — what the
+    // QueryExecutionListener above is expected to have captured
+    val ended = new AtomicInteger
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionEnd => ended.incrementAndGet()
+        case _ => ()
+      }
+    })
+    def counts = buf.synchronized((n, ended.get))
     names.foreach { name =>
-      buf.clear(); n = 0
+      buf.synchronized { buf.clear(); n = 0 }
+      ended.set(0)
       val df = graft.SparkEntry.queries(name)(spark, sfDir)
       df.count()
-      // listener events are posted asynchronously (no public drain API);
-      // a generous sleep is fine for a diagnostics-only tool
-      Thread.sleep(3000)
+      // listener events are posted asynchronously (no public drain API):
+      // wait until the counts hold still for a second, at most 30 s
+      val settled = drain(() => counts)
+      val (captured, expected) = counts
       buf.synchronized {
         buf.append(s"==== final plan (returned DataFrame) ====\n")
         buf.append(df.queryExecution.explainString(
@@ -69,10 +90,27 @@ object ExecPlanSnap {
         buf.append('\n')
       }
       val p = outDir.resolve(s"${name}_rounds_$tag.txt")
-      Files.writeString(p, buf.toString)
-      println(s"[execplansnap] wrote $p (${buf.length} chars, $n executions)")
+      Files.writeString(p, buf.synchronized(buf.toString))
+      println(s"[execplansnap] wrote $p (${buf.length} chars, captured $captured of " +
+        s"$expected ended SQL executions${if (settled) "" else "; events still arriving after 30 s"})")
       spark.catalog.clearCache()
     }
     spark.stop()
+  }
+
+  /** Poll the (captured, ended) counts until at least one execution has
+    * ended — the query's own count() is one — and neither count has moved
+    * for `quietMs`; false when that has not happened within `maxMs`. */
+  private def drain(read: () => (Int, Int), quietMs: Long = 1000, maxMs: Long = 30000): Boolean = {
+    val start = System.currentTimeMillis()
+    var last = read()
+    var since = start
+    while (last._2 == 0 || System.currentTimeMillis() - since < quietMs) {
+      if (System.currentTimeMillis() - start > maxMs) return false
+      Thread.sleep(100)
+      val now = read()
+      if (now != last) { last = now; since = System.currentTimeMillis() }
+    }
+    true
   }
 }

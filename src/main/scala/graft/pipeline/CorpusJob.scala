@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.io.TableIO
@@ -35,6 +35,7 @@ import graft.io.TableIO
   * keys); the quality gate and split assignment are map-side; the
   * final write shuffles once into (split, bucket) layout. Nothing
   * collects to the driver but summary counts.
+  * The split counts are observed metrics of that write, not a re-read.
   */
 object CorpusJob {
 
@@ -94,18 +95,20 @@ object CorpusJob {
       .withColumn("bucket", pmod(xxhash64(col("url")), lit(nBuckets)))
       .drop("k")
 
-    val staging = TableIO.stagingDir(outDir, batchId)
-    finalDf.write.mode("overwrite").partitionBy("split", "bucket").parquet(staging)
-    val staged = spark.read.schema(finalDf.schema).parquet(staging)
-    val bySplit = staged.groupBy("split").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val nOut = bySplit.values.sum
+    val splits = Seq("train", "val", "test")
+    val bySplit = Observation("corpus-splits")
+    val inSplit = splits.map(s => count(when(col("split") === s, 1)).as(s))
+    finalDf.observe(bySplit, inSplit.head, inSplit.tail: _*)
+      .write.mode("overwrite").partitionBy("split", "bucket")
+      .parquet(TableIO.stagingDir(outDir, batchId))
+    val counts = bySplit.get
+    val Seq(train, valN, test) = splits.map(counts(_).asInstanceOf[Long])
+    val nOut = train + valN + test
     deduped.unpersist()
     TableIO.replaceData(outDir, batchId)
 
-    Summary(ex, sc, nOut, nIn - nDeduped, nDeduped - nOut,
-      bySplit.getOrElse("train", 0L), bySplit.getOrElse("val", 0L),
-      bySplit.getOrElse("test", 0L), (System.nanoTime() - t0) / 1e9)
+    Summary(ex, sc, nOut, nIn - nDeduped, nDeduped - nOut, train, valN, test,
+      (System.nanoTime() - t0) / 1e9)
   }
 
   def main(args: Array[String]): Unit = {

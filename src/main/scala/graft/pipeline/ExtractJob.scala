@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.PageRow
 import graft.extract.Extractor
@@ -8,19 +8,27 @@ import graft.gen.SyntheticCorpus
 import graft.io.TableIO
 
 /** The production extraction job (north rule): pages table → anti-join
-  * resume → spread-repartition → mapPartitions(extract) → atomic batch
-  * commit + per-partition lineage metrics.
+  * resume → (url, html) spread-repartition → mapPartitions(extract +
+  * lineage tally) → atomic batch commit + per-partition lineage metrics,
+  * all in ONE Spark pass over the pages.
   *
   * Scale design (SURVEY §4.3):
   *  - resume = LEFT ANTI join against the output table's pruned url
   *    column — the data files ARE the checkpoint, no side state;
+  *  - only (url, html) cross the Exchange: they are all extraction reads;
   *  - repartition on xxhash64(url) to 2× parallelism spreads the
   *    heavy-tailed html sizes (row = unit of work, so url-hash salting
   *    is the right granularity; AQE skew-join handles the anti-join);
   *  - output bucketed by pmod(xxhash64(url), nBuckets) — the Parquet
   *    emulation of Iceberg bucket(url) for bucket-pruned downstream
   *    joins;
-  *  - per-row fault isolation: a bad page becomes an ok=false row.
+  *  - per-row fault isolation: a bad page becomes an ok=false row;
+  *  - lineage is counted in-task: the write's own tasks tally their
+  *    partition into a [[LineageAccumulator]], whose replace-by-key merge
+  *    keeps one row per partition under task retries and speculation
+  *    (Spark merges a result task's update from its first successful
+  *    attempt only, and extraction is deterministic, so every attempt
+  *    tallies the same row) — no re-read of the staged batch.
   *
   * Usage: ExtractJob --pages <dir>|synthetic:<n> --out <dir>
   *        [--buckets B] [--cores N]
@@ -38,66 +46,55 @@ object ExtractJob {
     TableIO.clearStaging(outDir)
     val batchId = TableIO.nextBatchId(outDir)
 
-    val pages: Dataset[PageRow] =
-      if (pagesSpec.startsWith("synthetic:"))
-        SyntheticCorpus.generate(spark, pagesSpec.stripPrefix("synthetic:").toLong)
-      else spark.read.parquet(pagesSpec).as[PageRow]
+    val synthetic = Option.when(pagesSpec.startsWith("synthetic:"))(
+      pagesSpec.stripPrefix("synthetic:").toLong)
+    val pages: Dataset[PageRow] = synthetic match {
+      case Some(n) => SyntheticCorpus.generate(spark, n)
+      case None => spark.read.parquet(pagesSpec).as[PageRow]
+    }
 
     // R1 resume: anti-join against committed output (url column only —
     // Parquet column pruning keeps this scan narrow)
     val done = TableIO.readData(spark, outDir).map(_.select("url"))
     val todo = done match {
-      case Some(d) => pages.join(d, Seq("url"), "left_anti").as[PageRow]
-      case None => pages
+      case Some(d) => pages.join(d, Seq("url"), "left_anti")
+      case None => pages.toDF()
     }
 
+    val lineage = new LineageAccumulator
+    spark.sparkContext.register(lineage)
     val parallelism = spark.sparkContext.defaultParallelism
     val extracted = todo
+      .select("url", "html").as[(String, Array[Byte])]
       .repartition(parallelism * 2, col("url")) // spread heavy-tailed rows
-      .mapPartitions(Extractor.run(_))
+      .mapPartitions(rows => lineage.tally(rows.map { case (u, h) => Extractor.extract(u, h) }))
       .withColumn("bucket", pmod(xxhash64(col("url")), lit(nBuckets)))
       .withColumn("part_id", spark_partition_id())
 
-    // stage → metrics → atomic publish
-    val staging = TableIO.stagingDir(outDir, batchId)
-    extracted.write.mode("overwrite").partitionBy("bucket").parquet(staging)
+    // stage → atomic publish; the write's tasks fill `lineage`.
+    // Scale bound: the accumulator carries ONE 7-field row per non-empty
+    // partition, so lineage is O(partitions-per-batch), not O(rows) —
+    // callers must keep the per-batch partition count bounded (split a
+    // 10^6-partition corpus into batches), which resume-by-anti-join
+    // makes natural
+    extracted.write.mode("overwrite").partitionBy("bucket")
+      .parquet(TableIO.stagingDir(outDir, batchId))
+    val mRows = lineage.value.values.toSeq.sortBy(_.partition_id)
+    val nExtracted = mRows.map(_.urls_seen).sum
 
-    // explicit schema: a fully-resumed run stages zero rows, and an empty
-    // parquet dir has nothing to infer from
-    val staged = spark.read.schema(extracted.schema).parquet(staging)
-    val metrics = staged.groupBy(col("part_id").as("partition_id"))
-      .agg(
-        count(lit(1)).as("urls_seen"),
-        sum(when(col("ok"), 1L).otherwise(0L)).as("urls_ok"),
-        sum(when(col("ok"), 0L).otherwise(1L)).as("urls_failed"),
-        sum(col("blocks_kept").cast("long")).as("blocks_kept"),
-        sum(col("blocks_dropped").cast("long")).as("blocks_dropped"),
-        sum(size(col("spans")).cast("long")).as("span_total")
-      )
-    // materialize lineage rows BEFORE the rename publishes the batch —
-    // the metrics plan reads the staging dir, which stops existing.
-    // Scale bound: ONE 7-field row per input partition, so the collect
-    // is O(partitions-per-batch), not O(rows) — callers must keep the
-    // per-batch partition count bounded (split a 10^6-partition corpus
-    // into batches), which resume-by-anti-join makes natural
-    val mRows = metrics.as[(Int, Long, Long, Long, Long, Long, Long)].collect().toSeq
-    val totals = (mRows.map(_._2).sum, mRows.map(_._4).sum)
-
-    // input size: the synthetic spec knows its count, and a parquet
-    // count is footer metadata — never re-run the generation plan
-    val inputN =
-      if (pagesSpec.startsWith("synthetic:")) pagesSpec.stripPrefix("synthetic:").toLong
-      else spark.read.parquet(pagesSpec).count()
-    if (totals._1 == 0) { // fully resumed: nothing to publish
+    // input size: the synthetic spec knows its count; a fresh table
+    // extracted every page (one row out per row in); only a resume needs
+    // the parquet footer count
+    val inputN = synthetic.getOrElse(
+      if (done.isEmpty) nExtracted else spark.read.parquet(pagesSpec).count())
+    if (nExtracted == 0) { // fully resumed: nothing to publish
       TableIO.clearStaging(outDir)
       Summary("-", inputN, 0, 0, inputN, (System.nanoTime() - t0) / 1e9)
     } else {
       TableIO.commitBatch(outDir, batchId)
-      val metricsDf = mRows.toDF("partition_id", "urls_seen", "urls_ok",
-        "urls_failed", "blocks_kept", "blocks_dropped", "span_total")
-      TableIO.appendMetrics(metricsDf, outDir, batchId)
-      Summary(batchId, inputN, totals._1, totals._2,
-        inputN - totals._1, (System.nanoTime() - t0) / 1e9)
+      TableIO.appendMetrics(mRows.toDF(), outDir, batchId)
+      Summary(batchId, inputN, nExtracted, mRows.map(_.urls_failed).sum,
+        inputN - nExtracted, (System.nanoTime() - t0) / 1e9)
     }
   }
 

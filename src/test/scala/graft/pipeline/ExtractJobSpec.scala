@@ -1,7 +1,9 @@
 package graft.pipeline
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 import graft.SparkTestSession
 import graft.io.TableIO
 import java.nio.file.{Files, Paths}
@@ -71,5 +73,61 @@ class ExtractJobSpec extends AnyFunSuite {
     val s = ExtractJob.run(spark, "synthetic:60", out) // next run clears + proceeds
     assert(s.extracted == 10)
     assert(TableIO.readData(spark, out).get.count() == 60)
+  }
+
+  /** The lineage rows as the job derived them before it counted them
+    * in-task: a groupBy over the batch's committed data. */
+  private def groupedLineage(data: DataFrame) =
+    data.groupBy(col("part_id").as("partition_id"))
+      .agg(
+        count(lit(1)).as("urls_seen"),
+        sum(when(col("ok"), 1L).otherwise(0L)).as("urls_ok"),
+        sum(when(col("ok"), 0L).otherwise(1L)).as("urls_failed"),
+        sum(col("blocks_kept").cast("long")).as("blocks_kept"),
+        sum(col("blocks_dropped").cast("long")).as("blocks_dropped"),
+        sum(size(col("spans")).cast("long")).as("span_total"))
+
+  private val metricsCols = Seq("partition_id", "urls_seen", "urls_ok", "urls_failed",
+    "blocks_kept", "blocks_dropped", "span_total")
+
+  test("lineage: metrics rows equal a groupBy(part_id) over each committed batch") {
+    val out = tmp()
+    val s1 = ExtractJob.run(spark, "synthetic:100", out)
+    // 5 new pages over 2x4 partitions: this batch leaves partitions empty
+    val s2 = ExtractJob.run(spark, "synthetic:105", out)
+    assert(s2.extracted == 5 && s2.skippedDone == 100)
+    val data = TableIO.readData(spark, out).get
+    val m = TableIO.readMetrics(spark, out).get
+    assert(m.schema.map(f => f.name -> f.dataType) ==
+      Seq("partition_id" -> IntegerType) ++ metricsCols.tail.map(_ -> LongType) ++
+        Seq("batch" -> StringType))
+    for ((batch, n) <- Seq(s1.batchId -> 100L, s2.batchId -> 5L)) {
+      val got = m.filter(col("batch") === batch).select(metricsCols.map(col): _*).collect()
+      val want = groupedLineage(data.filter(col("batch") === batch)).collect()
+      assert(got.toSet == want.toSet, s"batch $batch")
+      assert(got.length == want.length, s"batch $batch: one row per partition")
+      assert(got.forall(_.getLong(1) > 0), s"batch $batch: no zero-row partition rows")
+      assert(got.map(_.getLong(1)).sum == n)
+    }
+    assert(m.filter(col("batch") === s2.batchId).count() < 8,
+      "the partial batch must leave some partitions without a row")
+  }
+
+  test("parquet pages: input, extracted and skipped on fresh and resumed runs") {
+    import spark.implicits._
+    val pages = tmp(); val more = tmp(); val out = tmp()
+    graft.gen.SyntheticCorpus.generate(spark, 120).write.mode("overwrite").parquet(pages)
+    // same seed → the first 120 pages are the same pages
+    graft.gen.SyntheticCorpus.generate(spark, 150).write.mode("overwrite").parquet(more)
+    val fresh = ExtractJob.run(spark, pages, out)
+    assert((fresh.input, fresh.extracted, fresh.skippedDone) == (120L, 120L, 0L))
+    val grown = ExtractJob.run(spark, more, out)
+    assert((grown.input, grown.extracted, grown.skippedDone) == (150L, 30L, 120L))
+    val done = ExtractJob.run(spark, more, out)
+    assert((done.input, done.extracted, done.skippedDone) == (150L, 0L, 150L))
+    assert(done.batchId == "-")
+    val data = TableIO.readData(spark, out).get
+    assert(data.count() == 150 && data.select("url").distinct().count() == 150)
+    assert(fresh.failed + grown.failed == data.filter(!$"ok").count())
   }
 }
