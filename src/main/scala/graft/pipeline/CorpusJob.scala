@@ -112,20 +112,11 @@ object CorpusJob {
   }
 
   def main(args: Array[String]): Unit = {
-    val opts = args.sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
+    val opts = JobSession.opts(args)
     val pages = opts.getOrElse("--pages", "synthetic:1000")
     val out = opts.getOrElse("--out",
       sys.error("usage: CorpusJob --pages <spec> --out <dir> [--cores N]"))
-    val cores = opts.getOrElse("--cores", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-corpus")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = JobSession("graft-corpus", opts)
     val s = run(spark, pages, out)
     println(f"[corpus] extract=${s.extract.extracted} skipped=${s.extract.skippedDone} " +
       f"scrubTemplates=${s.scrub.templateLines} docs=${s.docs} " +

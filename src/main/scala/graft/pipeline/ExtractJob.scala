@@ -8,17 +8,23 @@ import graft.gen.SyntheticCorpus
 import graft.io.TableIO
 
 /** The production extraction job (north rule): pages table → anti-join
-  * resume → (url, html) spread-repartition → mapPartitions(extract +
-  * lineage tally) → atomic batch commit + per-partition lineage metrics,
-  * all in ONE Spark pass over the pages.
+  * resume → mapPartitions(extract + lineage tally) → atomic batch commit
+  * + per-partition lineage metrics, all in ONE Spark pass over the pages;
+  * a fresh run is a single scan → extract → write stage, no Exchange.
   *
   * Scale design (SURVEY §4.3):
   *  - resume = LEFT ANTI join against the output table's pruned url
   *    column — the data files ARE the checkpoint, no side state;
-  *  - only (url, html) cross the Exchange: they are all extraction reads;
-  *  - repartition on xxhash64(url) to 2× parallelism spreads the
-  *    heavy-tailed html sizes (row = unit of work, so url-hash salting
-  *    is the right granularity; AQE skew-join handles the anti-join);
+  *  - the unit of work is the scan split, extracted in the task that
+  *    reads it (reference analog: per-paper work scheduled straight from
+  *    the file listing, split_htmls_to_pages.py:140-176). A split is
+  *    bounded in bytes by `spark.sql.files.maxPartitionBytes` and each
+  *    row by the 16 MiB html cap (`Extractor.extract`), so the heavy
+  *    tail is bounded per task without moving the html. A resume run
+  *    follows the partitioning the anti-join produces (AQE skew-join
+  *    splits its hot partitions). No repartition: at 100 TB one would
+  *    shuffle the whole html corpus just to re-cut splits the scan
+  *    already sized by bytes;
   *  - output bucketed by pmod(xxhash64(url), nBuckets) — the Parquet
   *    emulation of Iceberg bucket(url) for bucket-pruned downstream
   *    joins;
@@ -28,7 +34,8 @@ import graft.io.TableIO
   *    keeps one row per partition under task retries and speculation
   *    (Spark merges a result task's update from its first successful
   *    attempt only, and extraction is deterministic, so every attempt
-  *    tallies the same row) — no re-read of the staged batch.
+  *    tallies the same row) — no re-read of the staged batch. `part_id`
+  *    is the write task's partition: on a fresh run, the scan split.
   *
   * Usage: ExtractJob --pages <dir>|synthetic:<n> --out <dir>
   *        [--buckets B] [--cores N]
@@ -63,10 +70,8 @@ object ExtractJob {
 
     val lineage = new LineageAccumulator
     spark.sparkContext.register(lineage)
-    val parallelism = spark.sparkContext.defaultParallelism
     val extracted = todo
       .select("url", "html").as[(String, Array[Byte])]
-      .repartition(parallelism * 2, col("url")) // spread heavy-tailed rows
       .mapPartitions(rows => lineage.tally(rows.map { case (u, h) => Extractor.extract(u, h) }))
       .withColumn("bucket", pmod(xxhash64(col("url")), lit(nBuckets)))
       .withColumn("part_id", spark_partition_id())
@@ -99,25 +104,11 @@ object ExtractJob {
   }
 
   def main(args: Array[String]): Unit = {
-    val opts = args.sliding(2, 2).collect { case Array(k, v) => (k, v) }.toMap
+    val opts = JobSession.opts(args)
     val pagesSpec = opts.getOrElse("--pages", "synthetic:10000")
     val outDir = opts.getOrElse("--out", "/tmp/graft_out")
     val nBuckets = opts.getOrElse("--buckets", "8").toInt
-    val cores = opts.getOrElse("--cores", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-extract")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // pages rows are KBs–MBs each; smaller scan splits keep per-task
-      // memory bounded and the heavy tail spread (SURVEY §4.3 spill note)
-      .config("spark.sql.files.maxPartitionBytes", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = JobSession("graft-extract", opts)
 
     val s = run(spark, pagesSpec, outDir, nBuckets)
     println(

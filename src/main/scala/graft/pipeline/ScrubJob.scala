@@ -81,23 +81,12 @@ object ScrubJob {
   }
 
   def main(args: Array[String]): Unit = {
-    val opts = args.sliding(2, 2).collect { case Array(k, v) => (k, v) }.toMap
+    val opts = JobSession.opts(args)
     val inDir = opts.getOrElse("--in", "/tmp/graft_out")
     val outDir = opts.getOrElse("--out", "/tmp/graft_scrubbed")
     val ratio = opts.getOrElse("--ratio", "0.4").toDouble
     val nBuckets = opts.getOrElse("--buckets", "8").toInt
-    val cores = opts.getOrElse("--cores", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-scrub")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = JobSession("graft-scrub", opts)
 
     val s = run(spark, inDir, outDir, ratio, nBuckets)
     println(

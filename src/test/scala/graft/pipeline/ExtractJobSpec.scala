@@ -1,14 +1,26 @@
 package graft.pipeline
 
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.SparkTestSession
+import graft.core.ExtractedDoc
+import graft.extract.Extractor
+import graft.gen.SyntheticCorpus
 import graft.io.TableIO
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
 
-class ExtractJobSpec extends AnyFunSuite {
+class ExtractJobSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkTestSession.spark
 
   private def tmp(): String = Files.createTempDirectory("graft_job").toString
@@ -93,7 +105,8 @@ class ExtractJobSpec extends AnyFunSuite {
   test("lineage: metrics rows equal a groupBy(part_id) over each committed batch") {
     val out = tmp()
     val s1 = ExtractJob.run(spark, "synthetic:100", out)
-    // 5 new pages over 2x4 partitions: this batch leaves partitions empty
+    // 5 new pages over the anti-join's output partitions: this batch
+    // leaves partitions empty
     val s2 = ExtractJob.run(spark, "synthetic:105", out)
     assert(s2.extracted == 5 && s2.skippedDone == 100)
     val data = TableIO.readData(spark, out).get
@@ -129,5 +142,63 @@ class ExtractJobSpec extends AnyFunSuite {
     val data = TableIO.readData(spark, out).get
     assert(data.count() == 150 && data.select("url").distinct().count() == 150)
     assert(fresh.failed + grown.failed == data.filter(!$"ok").count())
+  }
+
+  /** Every executed plan of a write over `pagesDir`'s scan, as a
+    * QueryExecutionListener sees it while `body` runs. */
+  private def pageWritePlans(pagesDir: String)(body: => Unit): Seq[SparkPlan] = {
+    val plans = new ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val leaf = Paths.get(pagesDir).getFileName.toString
+    def writesPages(p: SparkPlan) =
+      collect(p) { case w: DataWritingCommandExec => w }.nonEmpty &&
+        collect(p) { case s: FileSourceScanExec => s }
+          .exists(_.relation.location.rootPaths.exists(_.getName == leaf))
+    spark.listenerManager.register(listener)
+    try {
+      body
+      // listener events arrive asynchronously
+      eventually(timeout(30.seconds), interval(100.millis)) {
+        assert(plans.asScala.exists(writesPages))
+      }
+    } finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq.filter(writesPages)
+  }
+
+  test("plan: a fresh run extracts in the scan's own tasks — the write has no Exchange") {
+    val pages = tmp(); val out = tmp()
+    SyntheticCorpus.generate(spark, 120).write.mode("overwrite").parquet(pages)
+    val writes = pageWritePlans(pages) {
+      assert(ExtractJob.run(spark, pages, out).extracted == 120)
+    }
+    assert(writes.length == 1, writes.mkString("\n"))
+    val exchanges = collectWithSubqueries(writes.head) {
+      case e: Exchange => e
+      case r: ReusedExchangeExec => r
+    }
+    assert(exchanges.isEmpty, s"the write moved rows:\n${writes.head.treeString}")
+  }
+
+  test("one-split pages: a single scan task extracts every page, lineage still reconciles") {
+    import spark.implicits._
+    val pages = tmp(); val out = tmp()
+    SyntheticCorpus.generate(spark, 90).coalesce(1).write.mode("overwrite").parquet(pages)
+    val in = spark.read.parquet(pages)
+    assert(in.rdd.getNumPartitions == 1, "the pages must be one scan split")
+    val s = ExtractJob.run(spark, pages, out)
+    assert((s.input, s.extracted, s.skippedDone) == (90L, 90L, 0L))
+    val data = TableIO.readData(spark, out).get
+    val cols = Seq("url", "markdown", "spans").map(col)
+    val want = spark.createDataset[ExtractedDoc](
+      in.select("url", "html").as[(String, Array[Byte])].collect().toSeq
+        .map { case (u, h) => Extractor.extract(u, h) })
+    assert(data.select(cols: _*).collect().toSet == want.select(cols: _*).collect().toSet)
+    val m = TableIO.readMetrics(spark, out).get.select(metricsCols.map(col): _*).collect()
+    assert(m.toSet == groupedLineage(data).collect().toSet)
+    assert(m.length == 1, "one scan split, one partition row")
   }
 }
