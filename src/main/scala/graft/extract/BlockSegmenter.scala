@@ -79,7 +79,11 @@ object BlockSegmenter {
           case "p" | "h1" | "h2" | "h3" | "h4" | "h5" | "h6" | "li" | "blockquote" | "pre" | "table" => 1
           case _ => 0
         }
-        self + e.children.map(countCandidates).sum
+        var total = self
+        val cs = e.children
+        var i = 0
+        while (i < cs.length) { total += countCandidates(cs(i)); i += 1 }
+        total
     }
 
     def emit(b: Block, keep: Boolean): Unit =
@@ -543,6 +547,12 @@ object BlockSegmenter {
     c == '.' || c == '!' || c == '?' || c == ';' || c == ':' || c == ',' ||
       c == '。' || c == '，' || c == '、' || c == '！' || c == '？'
 
+  /** Per ASCII char: bit 0 set for a word char (not Character.isWhitespace),
+    * bit 1 for a char [[isPunct]] admits. */
+  private val asciiKind: Array[Byte] = Array.tabulate[Byte](128) { c =>
+    ((if (Character.isWhitespace(c)) 0 else 1) | (if (isPunct(c.toChar)) 2 else 0)).toByte
+  }
+
   /** Single-walk paragraph statistics — word/link-word counts, punctuation,
     * math presence — with no intermediate string construction (hot path).
     */
@@ -550,17 +560,36 @@ object BlockSegmenter {
     var total = 0; var link = 0; var punct = false; var math = false
     var nonWs = false
     private var inWord = false
+    /** ASCII chars classify by one table load and count word starts
+      * without branching; the rest by the CJK range, Character.isWhitespace
+      * and isPunct. A word char either starts a word or continues one a
+      * previous char began, so `nonWs` follows from the word count. */
     def addText(s: String, inLink: Boolean): Unit = {
+      var words = 0
+      var w = if (inWord) 1 else 0
+      var kinds = 0
       var i = 0
       while (i < s.length) {
         val c = s.charAt(i)
-        if (isCjk(c)) { total += 1; if (inLink) link += 1; inWord = false; nonWs = true }
-        else if (!c.isWhitespace) {
-          if (!inWord) { total += 1; if (inLink) link += 1 }
-          inWord = true; nonWs = true
-          if (isPunct(c)) punct = true
-        } else inWord = false
+        if (c < 128) {
+          val k = asciiKind(c)
+          words += k & 1 & ~w
+          w = k & 1
+          kinds |= k
+        } else if (isCjk(c)) { words += 1; w = 0 }
+        else if (Character.isWhitespace(c)) w = 0
+        else {
+          words += 1 - w
+          w = 1
+          if (isPunct(c)) kinds |= 2
+        }
         i += 1
+      }
+      inWord = w == 1
+      if ((kinds & 2) != 0) punct = true
+      if (words > 0) {
+        total += words; if (inLink) link += words
+        nonWs = true
       }
     }
     def linkDensity: Double = if (total == 0) 0.0 else link.toDouble / total

@@ -52,8 +52,19 @@ object DomBuilder {
   val defaultMaxDepth = 256
   val defaultMaxNodes = 1 << 20
 
+  /** An open element: its children so far, in a plain growable array
+    * that [[Frame.freeze]] copies once into the element's ArraySeq. */
   private final class Frame(val tag: String, val attrs: Map[String, String]) {
-    val children = new ArrayBuffer[DomNode](4)
+    private var kids = new Array[DomNode](4)
+    private var n = 0
+    def add(c: DomNode): Unit = {
+      if (n == kids.length) kids = java.util.Arrays.copyOf(kids, n * 2)
+      kids(n) = c
+      n += 1
+    }
+    def freeze: DomElem = DomElem(tag, attrs,
+      if (n == 0) Vector.empty
+      else scala.collection.immutable.ArraySeq.unsafeWrapArray(java.util.Arrays.copyOf(kids, n)))
   }
 
   /** Never throws. Always returns a root element ("#root"). */
@@ -66,30 +77,26 @@ object DomBuilder {
 
     def top: Frame = stack(stack.length - 1)
 
-    def freeze(buf: ArrayBuffer[DomNode]): IndexedSeq[DomNode] =
-      if (buf.isEmpty) Vector.empty
-      else scala.collection.immutable.ArraySeq.unsafeWrapArray(buf.toArray)
-
     def closeTop(): Unit = {
       val f = stack.remove(stack.length - 1)
-      top.children += DomElem(f.tag, f.attrs, freeze(f.children))
+      top.add(f.freeze)
     }
 
     val it = tokens.iterator
     while (it.hasNext && nodes < maxNodes) {
       it.next() match {
         case TextTok(t) =>
-          top.children += DomText(t)
+          top.add(DomText(t))
           nodes += 1
 
         case StartTag(name, attrs, selfClosing) =>
           while (stack.length > 1 && impliedEnd(top.tag, name)) closeTop()
-          val amap = attrs.toMap
+          val amap: Map[String, String] = if (attrs.isEmpty) Map.empty else attrs.toMap
           if (voidTags.contains(name) || selfClosing) {
-            top.children += DomElem(name, amap, Vector.empty)
+            top.add(DomElem(name, amap, Vector.empty))
             nodes += 1
           } else if (stack.length >= maxDepth) {
-            top.children += DomElem(name, amap, Vector.empty) // flatten beyond cap
+            top.add(DomElem(name, amap, Vector.empty)) // flatten beyond cap
             nodes += 1
           } else {
             stack += new Frame(name, amap)
@@ -110,8 +117,7 @@ object DomBuilder {
       }
     }
     while (stack.length > 1) closeTop()
-    val root = stack(0)
-    DomElem(root.tag, root.attrs, freeze(root.children))
+    stack(0).freeze
   }
 
   def parse(html: String): DomElem = build(HtmlTokenizer.tokenize(html))

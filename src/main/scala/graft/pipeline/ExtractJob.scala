@@ -1,11 +1,16 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.core.PageRow
 import graft.extract.Extractor
 import graft.gen.SyntheticCorpus
 import graft.io.TableIO
+import scala.jdk.CollectionConverters._
 
 /** The production extraction job (north rule): pages table → anti-join
   * resume → mapPartitions(extract + lineage tally) → atomic batch commit
@@ -55,9 +60,9 @@ object ExtractJob {
 
     val synthetic = Option.when(pagesSpec.startsWith("synthetic:"))(
       pagesSpec.stripPrefix("synthetic:").toLong)
-    val pages: Dataset[PageRow] = synthetic match {
-      case Some(n) => SyntheticCorpus.generate(spark, n)
-      case None => spark.read.parquet(pagesSpec).as[PageRow]
+    val pages: DataFrame = synthetic match {
+      case Some(n) => SyntheticCorpus.generate(spark, n).toDF()
+      case None => readPages(spark, pagesSpec)
     }
 
     // R1 resume: anti-join against committed output (url column only —
@@ -65,7 +70,7 @@ object ExtractJob {
     val done = TableIO.readData(spark, outDir).map(_.select("url"))
     val todo = done match {
       case Some(d) => pages.join(d, Seq("url"), "left_anti")
-      case None => pages.toDF()
+      case None => pages
     }
 
     val lineage = new LineageAccumulator
@@ -90,8 +95,7 @@ object ExtractJob {
     // input size: the synthetic spec knows its count; a fresh table
     // extracted every page (one row out per row in); only a resume needs
     // the parquet footer count
-    val inputN = synthetic.getOrElse(
-      if (done.isEmpty) nExtracted else spark.read.parquet(pagesSpec).count())
+    val inputN = synthetic.getOrElse(if (done.isEmpty) nExtracted else pages.count())
     if (nExtracted == 0) { // fully resumed: nothing to publish
       TableIO.clearStaging(outDir)
       Summary("-", inputN, 0, 0, inputN, (System.nanoTime() - t0) / 1e9)
@@ -101,6 +105,32 @@ object ExtractJob {
       Summary(batchId, inputN, nExtracted, mRows.map(_.urls_failed).sum,
         inputN - nExtracted, (System.nanoTime() - t0) / 1e9)
     }
+  }
+
+  /** The pages columns extraction reads, typed as PageRow fixes them. */
+  private val pageColumns: StructType =
+    StructType(Encoders.product[PageRow].schema.filter(f => f.name == "url" || f.name == "html"))
+
+  /** The pages table's (url, html), read with their schema given: left to
+    * infer it, Spark runs a Spark job on every run just to read one
+    * parquet footer. One data file's footer is read here on the driver
+    * instead, so a table without either column still fails before any
+    * work starts (given a schema, Spark would read a missing column as
+    * nulls).
+    */
+  private def readPages(spark: SparkSession, pagesSpec: String): DataFrame = {
+    val df = spark.read.schema(pageColumns).parquet(pagesSpec)
+    val dataFile = df.inputFiles.headOption.getOrElse(
+      throw new IllegalArgumentException(s"pages table $pagesSpec has no data file"))
+    val conf = spark.sessionState.newHadoopConf()
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(new java.net.URI(dataFile)), conf))
+    val present = // column names resolve case-insensitively, as Spark's do
+      try reader.getFooter.getFileMetaData.getSchema.getFields.asScala.map(_.getName.toLowerCase).toSet
+      finally reader.close()
+    val missing = pageColumns.fieldNames.filterNot(present)
+    if (missing.nonEmpty) throw new IllegalArgumentException(
+      s"pages table $pagesSpec lacks column(s) ${missing.mkString(", ")}")
+    df
   }
 
   def main(args: Array[String]): Unit = {

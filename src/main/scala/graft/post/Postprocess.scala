@@ -27,21 +27,29 @@ object Postprocess {
     * O(n²) with copies, postprocessing.py:124-133 — SURVEY §7.4 #4): a
     * period L exists only if the final `minLen` chars recur at n-L-minLen,
     * so scan positions backwards with fast-failing regionMatches — the
-    * smallest L (first hit from the right) is the fundamental period.
+    * smallest L (first hit from the right) is the fundamental period. The
+    * window's first two chars are compared inline first ([[mayFoldEq]]),
+    * so regionMatches runs only where they can fold-match.
     */
   def truncateRepetitions(s: String, minLen: Int = 30): String = {
     val n = s.length
     if (n < 2 * minLen) return s
     var p = n - 2 * minLen          // candidate occurrence start (L = n - minLen - p)
     val pMin = n / 2 - minLen       // L ≤ n/2
+    val q = n - minLen              // the suffix window
+    val w0 = s.charAt(q)
+    val w1 = if (minLen >= 2) s.charAt(q + 1) else w0
     var L = -1
     // adversarial guard: a page where the 30-char suffix recurs densely
     // (self-periodic runs like '---…' separators) would cost O(n²) in
     // verifications; after a bounded number of candidates, switch to the
     // exact O(n) Z-array method instead of giving up (no recall loss)
     var attempts = 0
-    while (p >= pMin && p >= 0 && L < 0 && attempts < 64) {
-      if (s.regionMatches(true, p, s, n - minLen, minLen)) {
+    val pLo = math.max(pMin, 0)
+    while (p >= pLo && L < 0 && attempts < 64) {
+      while (p >= pLo && !(mayFoldEq(s.charAt(p), w0) && (minLen < 2 || mayFoldEq(s.charAt(p + 1), w1))))
+        p -= 1
+      if (p >= pLo && s.regionMatches(true, p, s, q, minLen)) {
         attempts += 1
         val cand = n - minLen - p
         if (s.regionMatches(true, n - cand, s, n - 2 * cand, cand)) L = cand
@@ -76,6 +84,17 @@ object Postprocess {
     }
     s.substring(0, cut).stripTrailing()
   }
+
+  /** False only where String.regionMatches(ignoreCase=true) must reject
+    * the pair: both chars ASCII and not one letter in two cases. A pair
+    * with a char ≥ 128 may still fold-match ('ı'/'i', 'ſ'/'s', the Kelvin
+    * sign/'k', 'İ'/'i'), so it is left to regionMatches.
+    */
+  private def mayFoldEq(a: Char, b: Char): Boolean =
+    a == b || (a | b) >= 128 || {
+      val la = a | 0x20
+      la == (b | 0x20) && la >= 'a' && la <= 'z'
+    }
 
   /** Case folding matching String.regionMatches(ignoreCase=true):
     * upper-then-lower (plain toLowerCase disagrees for e.g. 'I'/'ı'). */
@@ -182,9 +201,9 @@ object Postprocess {
     * (postprocessing.py:190-329).
     */
   def removeHallucinatedReferences(md: String, minSlice: Int = 15): SliceRemoval = {
+    if (lineCountBelow(md, minSlice)) return SliceRemoval(md, 0)
     val lines = md.split("\n", -1)
     val n = lines.length
-    if (n < minSlice) return SliceRemoval(md, 0)
     val norm = lines.map(removeNumbers)
     val usable = norm.map(l => l.length >= 3 && l.length <= 200)
 
@@ -263,6 +282,14 @@ object Postprocess {
     SliceRemoval(sb.toString, mergedSlices.length)
   }
 
+  /** Does `s` split on '\n' into fewer than `k` lines? Counts without splitting. */
+  private def lineCountBelow(s: String, k: Int): Boolean = {
+    var lines = 1
+    var i = s.indexOf('\n')
+    while (i >= 0 && lines < k) { lines += 1; i = s.indexOf('\n', i + 1) }
+    lines < k
+  }
+
   // ---- X10: environment closing ----------------------------------------
 
   private val envs = List("bmatrix", "pmatrix", "matrix", "tabular", "table")
@@ -289,10 +316,13 @@ object Postprocess {
   // ---- F7: pathological table cap ---------------------------------------
 
   /** Drop any line with >15 \begin{tabular}, >60 \multicolumn, or >400 '&'
-    * (postprocessing.py:449-457).
+    * (postprocessing.py:449-457). A document under every cap as a whole
+    * has no line over one, and is returned without splitting.
     */
   def killPathologicalTables(s: String): String =
-    s.linesWithSeparators.filterNot { line =>
+    if (countOccurrences(s, "\\begin{tabular}") <= 15 && countOccurrences(s, "\\multicolumn") <= 60 &&
+        countOccurrences(s, "&") <= 400) s
+    else s.linesWithSeparators.filterNot { line =>
       countOccurrences(line, "\\begin{tabular}") > 15 ||
       countOccurrences(line, "\\multicolumn") > 60 ||
       line.count(_ == '&') > 400
@@ -362,142 +392,202 @@ object Postprocess {
     t
   }
 
-  private val pLongTitle = java.util.regex.Pattern.compile("(?m)^#{1,6} {0,3}(.{100,})$")
-  private val pNumHeader = java.util.regex.Pattern.compile("(?m)^#{1,6} {0,3}[\\d.]+ *$\n?")
-  private val pEmptyTabular = java.util.regex.Pattern.compile(
+  private[post] val pLongTitle = java.util.regex.Pattern.compile("(?m)^#{1,6} {0,3}(.{100,})$")
+  private[post] val pNumHeader = java.util.regex.Pattern.compile("(?m)^#{1,6} {0,3}[\\d.]+ *$\n?")
+  private[post] val pEmptyTabular = java.util.regex.Pattern.compile(
     "\\\\begin\\{tabular\\}\\{[^}]*\\}\\s*\\\\end\\{tabular\\}")
-  private val pHashLine = java.util.regex.Pattern.compile("(?m)^[#\\s]*#+ *$\n?")
-  private val pDotLine = java.util.regex.Pattern.compile("(?m)^\\. *$\n?")
-  private val pTrailWs = java.util.regex.Pattern.compile("(?m)[ \t]+$")
-  private val pBlankSqueeze = java.util.regex.Pattern.compile("\n{3,}")
+  private[post] val pHashLine = java.util.regex.Pattern.compile("(?m)^[#\\s]*#+ *$\n?")
+  private[post] val pDotLine = java.util.regex.Pattern.compile("(?m)^\\. *$\n?")
+  private[post] val pTrailWs = java.util.regex.Pattern.compile("(?m)[ \t]+$")
+  private[post] val pBlankSqueeze = java.util.regex.Pattern.compile("\n{3,}")
 
-  /** One-pass feature scan: each boolean gates a regex stage below —
-    * java.util.regex full-document scans for patterns that cannot match
-    * dominated the execution profile.
+  /** Java's line terminators: where MULTILINE `^`/`$` anchor and `.` stops. */
+  private def isLineEnd(c: Char): Boolean =
+    c == '\n' || c == '\r' || c == '\u0085' || c == '\u2028' || c == '\u2029'
+
+  /** The chars of `\s` that do not end a line. */
+  private def isLineBlank(c: Char): Boolean =
+    c == ' ' || c == '\t' || c == '\u000B' || c == '\f'
+
+  /** Feature scan: each flag gates a stage of postprocessSingle —
+    * full-document java.util.regex scans for patterns that cannot match
+    * dominated the execution profile. Every flag is a superset of its
+    * stage's match condition on the scanned text (false ⇒ the stage
+    * would leave that text unchanged); postprocessSingle scans again
+    * once a stage has changed the text. No loop visits every char: each trigger is found by
+    * String.indexOf (a vectorized search) of its rarest char or of the
+    * whole needle, and line-start triggers are read at the line
+    * terminators that precede them.
     */
-  private final class Feat(s: String) {
-    var hash = false; var dotLine = false; var trailWs = false
-    var tripleNl = false; var amp = false; var http = false
-    var bracketEq = false; var beginEnv = false; var tabular = false; var leftmargin = false
-    var endEnv = false; var bulletLine = false; var midBullet = false
-    var footnote = false; var refMarker = false
-    // per-heading-line classification: each flag is a conservative
-    // superset of its regex's match condition, so the three '#' regexes
-    // below run only on documents that can actually match
-    var longTitleCand = false; var numHeaderCand = false
-    var hashLineCand = false; var hashAfterSpace = false
-    var i = 0
-    var prev = '\n'
-    var prev2 = '\n'
-    while (i < s.length) {
-      val c = s.charAt(i)
-      c match {
-        case '#' =>
-          hash = true
-          if (prev == '\n') {
-            var j = i
-            while (j < s.length && s.charAt(j) == '#') j += 1
-            var eol = s.indexOf('\n', j)
-            if (eol < 0) eol = s.length
-            // pLongTitle consumes at most 6 '#'s: hashes beyond the sixth
-            // count toward the 100-char title group
-            if (eol - (i + math.min(6, j - i)) >= 100) longTitleCand = true
-            var k = j
-            var only = true
-            while (k < eol && only) {
-              val ch = s.charAt(k)
-              // any whitespace is fine: pHashLine's [#\s]* and Java's
-              // $-before-terminator admit \r, \f, vertical tab
-              if (ch != '#' && !Character.isWhitespace(ch)) only = false
-              k += 1
-            }
-            if (only) hashLineCand = true
-            var m = j
-            while (m < eol && s.charAt(m) == ' ') m += 1
-            if (m < eol && (s.charAt(m).isDigit || s.charAt(m) == '.')) numHeaderCand = true
-          } else if (Character.isWhitespace(prev)) hashAfterSpace = true
-        case '.' => if (prev == '\n') dotLine = true
-        case '\n' =>
-          if (prev == ' ' || prev == '\t') trailWs = true
-          if (prev == '\n' && prev2 == '\n') tripleNl = true
-        case '&' => amp = true
-        case 'h' => if (!http && s.startsWith("http", i)) http = true
-        case '[' => if (prev == '\\') bracketEq = true
-                    else if (!leftmargin && s.startsWith("[leftmargin=*]", i)) leftmargin = true
-                    else if (!footnote && s.startsWith("[FOOTNOTE:", i)) footnote = true
-                    else if (prev == ' ' && prev2 == '*' && i >= 3 && s.charAt(i - 3) == '\n')
-                      refMarker = true
-                    else if (prev == ' ' && prev2 == '*' && i == 2) refMarker = true
-        case 'b' => if (!beginEnv && prev == '\\' && s.startsWith("begin{", i)) {
-          beginEnv = true
-          if (s.startsWith("begin{tabular}", i)) tabular = true
-        } else if (!tabular && prev == '\\' && s.startsWith("begin{tabular}", i)) tabular = true
-        case 'e' => if (!endEnv && prev == '\\' && s.startsWith("end{", i)) endEnv = true
-        case 'F' => if (!footnote && prev == '\n' && s.startsWith("Footnote ", i)) footnote = true
-        case ' ' =>
-          if (prev == '-' || prev == '*') {
-            if (prev2 == '\n') bulletLine = true
-            else if (prev2 == ' ') midBullet = true
-          }
-        case _ => ()
-      }
-      prev2 = prev; prev = c
-      i += 1
+  private[post] final class Feat(s: String) {
+    private val n = s.length
+    /** Any '#' (endTitle). */
+    val hash: Boolean = s.indexOf('#') >= 0
+    /** A line opening '#' with ≥100 chars after it (pLongTitle). */
+    var longTitle = false
+    /** A line opening '#'s, spaces, then a digit or '.' (pNumHeader). */
+    var numHeader = false
+    /** A line of only '#' and blanks, with a '#' (pHashLine). */
+    var hashLine = false
+    /** A line opening '.' (pDotLine). */
+    var dotLine = false
+    /** A space or tab before a line end or the string end (pTrailWs). */
+    var trailWs = false
+    /** '&', "\\multicolumn" (killPathologicalTables, with beginEnv). */
+    val amp: Boolean = s.indexOf('&') >= 0
+    var multicolumn = false
+    /** "http" (markdownCompatible's bare-URL linking). */
+    val http: Boolean = s.indexOf("http") >= 0
+    /** "\\[" or "\\bm{" (markdownCompatible's math rewrites). */
+    var math = false
+    /** "\\begin{", "\\begin{tabular}", "\\end{" (table and env stages). */
+    var beginEnv = false
+    var tabular = false
+    var endEnv = false
+    /** "[leftmargin=*]" (itemize artifact). */
+    val leftmargin: Boolean = s.indexOf("[leftmargin=*]") >= 0
+    /** "[FOOTNOTE:" or "\nFootnote " (footnotes). */
+    var footnote: Boolean = s.indexOf("[FOOTNOTE:") >= 0
+    /** A line opening "* [" (authorSpam). */
+    var refMarker = false
+    /** A line opening '-' or '*' (itemizeReflow, with midBullet). */
+    var bulletLine = false
+
+    if (n > 0) lineStart(0, afterNewline = false)
+    lineEnds('\n'); lineEnds('\r'); lineEnds('\u0085'); lineEnds('\u2028'); lineEnds('\u2029')
+    escapes()
+    if (n > 0 && (s.charAt(n - 1) == ' ' || s.charAt(n - 1) == '\t')) trailWs = true
+
+    /** " - " or " * ", looked for only once bulletLine holds. */
+    val midBullet: Boolean = bulletLine && (s.indexOf(" - ") >= 0 || s.indexOf(" * ") >= 0)
+
+    private def lineEnds(c: Char): Unit = {
+      var i = s.indexOf(c)
+      while (i >= 0) { lineEnd(i); i = s.indexOf(c, i + 1) }
     }
-    if (prev == ' ' || prev == '\t') trailWs = true
+
+    private def escapes(): Unit = {
+      var i = s.indexOf('\\')
+      while (i >= 0 && i + 1 < n) { escape(i + 1); i = s.indexOf('\\', i + 1) }
+    }
+
+    /** `s(i)` ends a line. */
+    private def lineEnd(i: Int): Unit = {
+      val nl = s.charAt(i) == '\n'
+      if (i > 0 && (s.charAt(i - 1) == ' ' || s.charAt(i - 1) == '\t')) trailWs = true
+      if (i + 1 < n) lineStart(i + 1, afterNewline = nl)
+    }
+
+    /** A line starts at `j` (< n). */
+    private def lineStart(j: Int, afterNewline: Boolean): Unit = s.charAt(j) match {
+      case '#' => heading(j)
+      case '.' => dotLine = true
+      case '*' =>
+        bulletLine = true
+        if (s.startsWith(" [", j + 1)) refMarker = true
+      case '-' => bulletLine = true
+      case 'F' => if (afterNewline && s.startsWith("Footnote ", j)) footnote = true
+      case c if isLineBlank(c) =>
+        var m = j + 1
+        while (m < n && isLineBlank(s.charAt(m))) m += 1
+        if (m < n && s.charAt(m) == '#' && hashesToLineEnd(m)) hashLine = true
+      case _ => ()
+    }
+
+    /** A line opens with '#' at `j`. pLongTitle needs one '#' and 100
+      * non-terminator chars; pNumHeader consumes the whole '#' run (a
+      * '#' is neither a space nor [\d.]). */
+    private def heading(j: Int): Unit = {
+      var k = j
+      while (k < n && s.charAt(k) == '#') k += 1
+      var eol = s.indexOf('\n', k)
+      if (eol < 0) eol = n
+      if (eol - j - 1 >= 100) longTitle = true
+      var m = k
+      while (m < n && s.charAt(m) == ' ') m += 1
+      if (m < n && ((s.charAt(m) >= '0' && s.charAt(m) <= '9') || s.charAt(m) == '.')) numHeader = true
+      if (hashesToLineEnd(k)) hashLine = true
+    }
+
+    /** Only '#' and blanks from `k` to the line's end. */
+    private def hashesToLineEnd(k: Int): Boolean = {
+      var m = k
+      while (m < n && (s.charAt(m) == '#' || isLineBlank(s.charAt(m)))) m += 1
+      m == n || isLineEnd(s.charAt(m))
+    }
+
+    /** A backslash precedes `j`. */
+    private def escape(j: Int): Unit = s.charAt(j) match {
+      case '[' => math = true
+      case 'b' =>
+        if (s.startsWith("begin{", j)) {
+          beginEnv = true
+          if (s.startsWith("begin{tabular}", j)) tabular = true
+        } else if (s.startsWith("bm{", j)) math = true
+      case 'e' => if (s.startsWith("end{", j)) endEnv = true
+      case 'm' => if (s.startsWith("multicolumn", j)) multicolumn = true
+      case _ => ()
+    }
   }
 
-  /** Test hook: the '#'-regex gate flags (longTitle, numHeader, hashLine,
-    * hashAfterSpace) for soundness property tests. */
-  private[post] def headingGates(s: String): (Boolean, Boolean, Boolean, Boolean) = {
-    val f = new Feat(s)
-    (f.longTitleCand, f.numHeaderCand, f.hashLineCand, f.hashAfterSpace)
-  }
+  /** The blank-line squeeze's gate, besides lone '#'/'.' lines removed:
+    * "\n\n\n" or a leading '\n' in the chain's input, or slices removed.
+    * It alone is not read from the text its stage sees, so that a
+    * "\n\n\n" the pathological-table cap leaves (a dropped line between
+    * blank lines) stays, as in the outputs CorpusGoldenSpec pins.
+    */
+  private def squeezeGate(md0: String, slicesRemoved: Int): Boolean =
+    md0.startsWith("\n") || md0.indexOf("\n\n\n") >= 0 || slicesRemoved > 0
 
   def postprocessSingle(md0: String, markdownFix: Boolean = true): Result = {
     graft.extract.DocBudget.tick() // wall-clock checkpoint between stages
     var md = md0
-    val f = new Feat(md)
+    // md's flags: a stage that changes md drops them and the next gate
+    // scans the new text, so each gate holds for the text its stage sees
+    var feat: Feat = null
+    def f: Feat = { if (feat == null) feat = new Feat(md); feat }
+    def set(next: String): Unit = if (next ne md) { md = next; feat = null }
     // >100-char titles are not titles (postprocessing.py:343-345);
     // numeral-only headers (postprocessing.py:352-356)
-    if (f.longTitleCand) md = pLongTitle.matcher(md).replaceAll("$1")
-    if (f.numHeaderCand) md = pNumHeader.matcher(md).replaceAll("")
+    if (f.longTitle) set(pLongTitle.matcher(md).replaceAll("$1"))
+    if (f.numHeader) set(pNumHeader.matcher(md).replaceAll(""))
     // itemize artifact (postprocessing.py:347)
-    if (f.leftmargin) md = md.replace("[leftmargin=*]\n", "")
+    if (f.leftmargin) set(md.replace("[leftmargin=*]\n", ""))
     // hallucinated trailing title (postprocessing.py:349-356)
-    if (f.hash) md = RepairStages.endTitle(md)
+    if (f.hash) set(RepairStages.endTitle(md))
     val truncated = truncateRepetitions(md)
     val wasTruncated = truncated.length < md.length
-    md = truncated
+    set(truncated)
     val sliced = removeHallucinatedReferences(md)
-    md = sliced.text
+    set(sliced.text)
     // author-initial spam + empty citation brackets (postprocessing.py:358-361)
-    if (f.refMarker) md = RepairStages.authorSpam(md)
+    if (f.refMarker) set(RepairStages.authorSpam(md))
     // lone word-char paragraph at page edge (postprocessing.py:362)
-    if (strayGate(md)) md = RepairStages.strayChar(md)
-    md = fixArtifacts(md)
+    if (strayGate(md)) set(RepairStages.strayChar(md))
+    set(fixArtifacts(md))
     // footnote relabel + [FOOTNOTE] spans (postprocessing.py:373-381)
-    if (f.footnote) md = RepairStages.footnotes(md)
+    if (f.footnote) set(RepairStages.footnotes(md))
     // one-line itemize re-flow (postprocessing.py:386-424)
-    if (f.bulletLine && f.midBullet) md = RepairStages.itemizeReflow(md)
-    if (f.amp || f.beginEnv) md = killPathologicalTables(md)
+    if (f.bulletLine && f.midBullet) set(RepairStages.itemizeReflow(md))
+    if (f.amp || f.beginEnv || f.multicolumn) set(killPathologicalTables(md))
     // table/tabular whitespace corrections (postprocessing.py:459-476)
-    if (f.beginEnv || f.endEnv) md = RepairStages.tableWhitespace(md)
+    if (f.beginEnv || f.endEnv) set(RepairStages.tableWhitespace(md))
     // empty tabular environments (postprocessing.py:458-476)
-    if (f.tabular) md = pEmptyTabular.matcher(md).replaceAll("")
+    if (f.tabular) set(pEmptyTabular.matcher(md).replaceAll(""))
     // repeated bold "S. A. B." hallucination (postprocessing.py:477)
-    md = RepairStages.sabSpam(md)
+    set(RepairStages.sabSpam(md))
     // lone '#' or '.' lines (postprocessing.py:478-481)
-    if (f.hashLineCand || f.hashAfterSpace) md = pHashLine.matcher(md).replaceAll("")
-    if (f.dotLine) md = pDotLine.matcher(md).replaceAll("")
-    if (f.beginEnv) md = closeEnvs(md)
-    if (f.trailWs || wasTruncated || sliced.slicesRemoved > 0)
-      md = pTrailWs.matcher(md).replaceAll("")
-    if (f.tripleNl || sliced.slicesRemoved > 0)
-      md = pBlankSqueeze.matcher(md).replaceAll("\n\n")
-    md = md.trim
-    if (markdownFix && (f.bracketEq || f.http))
-      md = markdownCompatible(md, f.bracketEq, f.http)
+    val beforeMarkers = md
+    if (f.hashLine) set(pHashLine.matcher(md).replaceAll(""))
+    if (f.dotLine) set(pDotLine.matcher(md).replaceAll(""))
+    val markersRemoved = md ne beforeMarkers
+    if (f.beginEnv) set(closeEnvs(md))
+    if (f.trailWs) set(pTrailWs.matcher(md).replaceAll(""))
+    if (markersRemoved || squeezeGate(md0, sliced.slicesRemoved))
+      set(pBlankSqueeze.matcher(md).replaceAll("\n\n"))
+    set(md.trim)
+    if (markdownFix && (f.math || f.http))
+      set(markdownCompatible(md, f.math, f.http))
     Result(md, wasTruncated, sliced.slicesRemoved)
   }
 
@@ -524,26 +614,43 @@ object Postprocess {
 
 /** Bounded Levenshtein (X12 substrate) — banded DP: O(n·maxDist). */
 object Distance {
+
+  /** min(edit distance, maxDist). Only cells with |i − j| ≤ maxDist are
+    * filled: a path that leaves the band already costs more than maxDist,
+    * so the band's values are exact wherever the distance is within it.
+    */
   def levenshtein(a: String, b: String, maxDist: Int = Int.MaxValue): Int = {
     if (a == b) return 0
-    val (s, t) = if (a.length <= b.length) (a, b) else (b, a)
+    val swap = a.length > b.length
+    val s = if (swap) b else a
+    val t = if (swap) a else b
     val n = s.length; val m = t.length
     if (m - n > maxDist) return maxDist
-    var prev = Array.tabulate(n + 1)(identity)
+    val k = math.min(maxDist, m) // band half-width; k ≥ m - n
+    val out = k + 1              // stands for every value past the band
+    var prev = new Array[Int](n + 1)
     var cur = new Array[Int](n + 1)
+    var i = 0
+    while (i <= n) { prev(i) = if (i <= k) i else out; i += 1 }
     var j = 1
     while (j <= m) {
-      graft.extract.DocBudget.tick() // per-column checkpoint (O(n·m) DP)
-      cur(0) = j
-      var best = cur(0)
-      var i = 1
-      while (i <= n) {
-        val cost = if (s.charAt(i - 1) == t.charAt(j - 1)) 0 else 1
-        cur(i) = math.min(math.min(cur(i - 1) + 1, prev(i) + 1), prev(i - 1) + cost)
-        if (cur(i) < best) best = cur(i)
+      graft.extract.DocBudget.tick() // per-column checkpoint
+      val lo = math.max(1, j - k)
+      val hi = math.min(n, j + k)
+      cur(0) = if (j <= k) j else out
+      cur(lo - 1) = if (lo == 1) cur(0) else out
+      var best = cur(lo - 1)
+      val tc = t.charAt(j - 1)
+      i = lo
+      while (i <= hi) {
+        val cost = if (s.charAt(i - 1) == tc) 0 else 1
+        val v = math.min(math.min(cur(i - 1) + 1, prev(i) + 1), prev(i - 1) + cost)
+        cur(i) = v
+        if (v < best) best = v
         i += 1
       }
-      if (best > maxDist) return maxDist
+      if (hi < n) cur(hi + 1) = out
+      if (best > k) return maxDist
       val tmp = prev; prev = cur; cur = tmp
       j += 1
     }

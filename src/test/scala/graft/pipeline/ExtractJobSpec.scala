@@ -144,6 +144,22 @@ class ExtractJobSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(fresh.failed + grown.failed == data.filter(!$"ok").count())
   }
 
+  test("parquet pages without url or html fail loudly before any work") {
+    import spark.implicits._
+    val noHtml = tmp(); val noUrl = tmp(); val empty = tmp()
+    Seq(("https://example.org/a", "<p>x</p>")).toDF("url", "body").write.mode("overwrite").parquet(noHtml)
+    Seq(("https://example.org/a", Array[Byte](60, 112, 62))).toDF("link", "html")
+      .write.mode("overwrite").parquet(noUrl)
+    for ((dir, col) <- Seq(noHtml -> "html", noUrl -> "url")) {
+      val out = tmp()
+      val e = intercept[IllegalArgumentException](ExtractJob.run(spark, dir, out))
+      assert(e.getMessage.contains(s"lacks column(s) $col"), e.getMessage)
+      assert(TableIO.readData(spark, out).isEmpty)
+    }
+    assert(intercept[IllegalArgumentException](ExtractJob.run(spark, empty, tmp()))
+      .getMessage.contains("has no data file"))
+  }
+
   /** Every executed plan of a write over `pagesDir`'s scan, as a
     * QueryExecutionListener sees it while `body` runs. */
   private def pageWritePlans(pagesDir: String)(body: => Unit): Seq[SparkPlan] = {
