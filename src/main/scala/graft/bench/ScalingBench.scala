@@ -3,16 +3,6 @@ package graft.bench
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
-/** Single-level run for JVM-flag experiments: ScalingBenchOne <cores> <pages>. */
-object ScalingBenchOne {
-  def main(args: Array[String]): Unit = {
-    val pages = args(1).toLong
-    ScalingBench.prepareCorpus(pages)
-    val r = ScalingBench.runAt(args(0).toInt, pages)
-    println(f"""{"cores":${r.cores},"docs_per_sec":${r.docsPerSec}%.1f,"wall_sec":${r.wallSec}%.2f}""")
-  }
-}
-
 /** Re-render BENCH/BASELINE.md from the stored runs (no benchmarking):
   * ScalingReport [nPages] [lo] [hi]. */
 object ScalingReport {
@@ -131,25 +121,12 @@ object ScalingBench {
   def prepareCorpus(nPages: Long): String = {
     val path = corpusPath(nPages)
     if (!Files.exists(Paths.get(path, "_SUCCESS"))) {
-      val spark = session(32, "graft-scaling-prep")
+      val spark = graft.Sessions("graft-scaling-prep", 32)
       graft.gen.SyntheticCorpus.generate(spark, nPages, partitions = partitions)
         .write.mode("overwrite").parquet(path)
       spark.stop()
     }
     path
-  }
-
-  private def session(cores: Int, name: String): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(name)
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
   }
 
   /** The timed production-path pass (parquet scan → extract → digest),
@@ -179,7 +156,7 @@ object ScalingBench {
 
   def runAt(cores: Int, nPages: Long): RunResult = {
     val path = corpusPath(nPages)
-    val spark = session(cores, s"graft-scaling-$cores")
+    val spark = graft.Sessions(s"graft-scaling-$cores", cores)
     import spark.implicits._
 
     // JVM/codegen warmup outside the timed window — the extraction

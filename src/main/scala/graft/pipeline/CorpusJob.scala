@@ -112,11 +112,11 @@ object CorpusJob {
   }
 
   def main(args: Array[String]): Unit = {
-    val opts = JobSession.opts(args)
+    val opts = options(args)
     val pages = opts.getOrElse("--pages", "synthetic:1000")
     val out = opts.getOrElse("--out",
       sys.error("usage: CorpusJob --pages <spec> --out <dir> [--cores N]"))
-    val spark = JobSession("graft-corpus", opts)
+    val spark = session("graft-corpus", opts)
     val s = run(spark, pages, out)
     println(f"[corpus] extract=${s.extract.extracted} skipped=${s.extract.skippedDone} " +
       f"scrubTemplates=${s.scrub.templateLines} docs=${s.docs} " +

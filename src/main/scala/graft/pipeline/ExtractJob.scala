@@ -134,11 +134,11 @@ object ExtractJob {
   }
 
   def main(args: Array[String]): Unit = {
-    val opts = JobSession.opts(args)
+    val opts = options(args)
     val pagesSpec = opts.getOrElse("--pages", "synthetic:10000")
     val outDir = opts.getOrElse("--out", "/tmp/graft_out")
     val nBuckets = opts.getOrElse("--buckets", "8").toInt
-    val spark = JobSession("graft-extract", opts)
+    val spark = session("graft-extract", opts)
 
     val s = run(spark, pagesSpec, outDir, nBuckets)
     println(

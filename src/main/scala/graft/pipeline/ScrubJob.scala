@@ -81,12 +81,12 @@ object ScrubJob {
   }
 
   def main(args: Array[String]): Unit = {
-    val opts = JobSession.opts(args)
+    val opts = options(args)
     val inDir = opts.getOrElse("--in", "/tmp/graft_out")
     val outDir = opts.getOrElse("--out", "/tmp/graft_scrubbed")
     val ratio = opts.getOrElse("--ratio", "0.4").toDouble
     val nBuckets = opts.getOrElse("--buckets", "8").toInt
-    val spark = JobSession("graft-scrub", opts)
+    val spark = session("graft-scrub", opts)
 
     val s = run(spark, inDir, outDir, ratio, nBuckets)
     println(

@@ -11,15 +11,15 @@ import org.apache.spark.sql.expressions.Window
   * bit-exact DuckDB oracle — including the candidate-pair generation.
   *
   * Scale notes: exact dedup is one shuffle on the content hash; MinHash/
-  * SimHash signatures are narrow map-only projections (SimHash is one
-  * row-local `aggregate` fold); LSH buckets shuffle on (band, key) — the
+  * SimHash signatures are narrow map-only projections (each one typed
+  * row-local map); LSH buckets shuffle on (band, key) — the
   * standard shingle→minhash→band→bucket-join plan; Jaccard verification
   * consumes the LSH buckets as its candidate pairs, so its join fan-out
   * is bounded by bucket size, not block size.
   */
 object Dedup {
 
-  import TextOps.{tokens, wordFeature}
+  import TextOps.tokens
 
   private[queries] val P = 1048573L // < 2^20, keeps band keys in 2^40
   private[queries] val A = Seq(7L, 11L, 13L, 17L, 19L, 23L, 29L, 31L)
@@ -67,7 +67,7 @@ object Dedup {
     // spaces only, empties kept) so \t\n\r-padded text shingles
     // identically to the DuckDB oracle's regexp_split_to_array(trim(..));
     // NULL text yields no signature, matching SQL NULL propagation
-    // (mirrors the r3 simhash fix at simhashMixedScala).
+    // (as simhash's callers keep NULL text a NULL simhash).
     if (text == null) return None
     val tk = TextOps.tokensScala(text)
     if (tk.length < 3) return None
@@ -161,66 +161,20 @@ object Dedup {
     """.trim)
   )
 
-  /** 16-bit SimHash skeleton: per-bit signed votes over (mixed) word
-    * features, the whole signature one row-local ordered fold — zero
-    * shuffles, zero row blowup. */
-  private def simhashOver(text: Column, mix: Column => Column): Column = {
-    val bits = sequence(lit(0), lit(15))
-    val votes = aggregate(
-      tokens(text),
-      array_repeat(lit(0L), 16),
-      (acc, w) => {
-        val f = mix(wordFeature(w))
-        zip_with(acc, bits, (a, i) => {
-          val p2 = pow(lit(2.0), i).cast("long")
-          val bit = pmod(floor(f.cast("double") / p2).cast("long"), lit(2L))
-          a + when(bit === 1, 1L).otherwise(-1L)
-        })
-      })
-    aggregate(
-      zip_with(votes, bits, (v, i) => when(v > 0, pow(lit(2.0), i).cast("long")).otherwise(0L)),
-      lit(0L), (acc, x) => acc + x)
-  }
-
-  /** The q21 signature: votes over the RAW word feature (bit-exactly what
-    * the DuckDB oracle replicates). */
-  private[graft] def simhashCol(text: Column): Column = simhashOver(text, identity)
-
-  /** Banding-grade SimHash for the streaming near-dup filter: word
-    * features pass through a Knuth multiplicative mix first, so all 16
-    * output bits carry signal — the raw q21 feature stays below 2^9, which
-    * leaves the top bands degenerate (always 0) and useless as LSH keys.
-    */
-  private[graft] def simhashMixedCol(text: Column): Column =
-    simhashOver(text, f => pmod(f * lit(2654435761L), lit(4294967296L)))
-
-  /** The 4×4-bit LSH bands of a 16-bit simhash, as an array column —
-    * shared by the batch q42 twin and the streaming band filter. */
-  private[graft] def simhashBands(simhash: Column): Column =
-    array((0 until 4).map(i =>
-      pmod(floor(simhash.cast("double") / math.pow(16, i)).cast("long"), lit(16L))): _*)
-
-  /** Integer-exact Scala twin of [[simhashMixedCol]] for the streaming
-    * hot path, where no persist barrier can stop CollapseProject from
-    * re-evaluating the Column fold once per band element. All arithmetic
-    * is integral (votes, Knuth mix, bit tests), so equality with the
-    * Column version is structural — and EventStreamsSpec asserts the
-    * streamed verdicts equal the batch q42 oracle-backed ones on a
-    * shared corpus. Tokenization goes through [[TextOps.tokensScala]]
-    * (SQL-trim semantics: spaces only, empties kept) so texts with
-    * leading/trailing \t\n\r hash identically to the Column twin.
-    * Non-null input only: the Column twin yields NULL for NULL text
-    * (which no Long can represent) — callers route NULL around this
-    * (EventStreams.bandClaimsStream emits the batch side's
-    * null-band rows directly). */
-  private[graft] def simhashMixedScala(text: String): Long = {
+  /** 16-bit SimHash: per-bit signed votes over the `mix`ed word
+    * features of the whitespace tokens, as one compiled row-local loop —
+    * zero shuffles, zero row blowup. All arithmetic is integral (votes,
+    * mix, bit tests), so it matches the DuckDB oracles bit for bit.
+    * Tokenization goes through [[TextOps.tokensScala]] (SQL-trim
+    * semantics: spaces only, empties kept) so texts with leading/trailing
+    * \t\n\r hash as the oracles' regexp_split_to_array(trim(..)) does.
+    * Non-null input only: callers keep NULL text a NULL (None) simhash. */
+  private[graft] def simhashScala(text: String, mix: Long => Long): Long = {
     val toks = TextOps.tokensScala(text)
     val votes = new Array[Int](16)
     var t = 0
     while (t < toks.length) {
-      val w = toks(t)
-      val f = TextOps.wordFeatureScala(w)
-      val m = (f * 2654435761L) % 4294967296L
+      val m = mix(TextOps.wordFeatureScala(toks(t)))
       var i = 0
       while (i < 16) {
         if (((m >> i) & 1L) == 1L) votes(i) += 1 else votes(i) -= 1
@@ -234,6 +188,21 @@ object Dedup {
     sh
   }
 
+  /** q21's mix: the RAW word feature. */
+  private val rawFeature: Long => Long = f => f
+
+  /** Banding-grade mix for the near-dup band filters (q42 and the
+    * streaming filter): a Knuth multiplicative mix, so all 16 output bits
+    * carry signal — the raw q21 feature (31·len + first code) is small
+    * for ASCII words, which leaves the top bands degenerate (always 0)
+    * and useless as LSH keys. */
+  private[graft] val knuthMix: Long => Long = f => (f * 2654435761L) % 4294967296L
+
+  /** The 4×4-bit LSH bands of a 16-bit simhash, as an array column. */
+  private[graft] def simhashBands(simhash: Column): Column =
+    array((0 until 4).map(i =>
+      pmod(floor(simhash.cast("double") / math.pow(16, i)).cast("long"), lit(16L))): _*)
+
   /** Batch twin of the streaming near-dup band filter (q42): each doc's
     * mixed simhash splits into 4 bands; the FIRST document (min doc_id —
     * the batch stand-in for earliest event time) claims each
@@ -246,20 +215,16 @@ object Dedup {
     "q42_band_claims",
     (s, dir) => {
       import s.implicits._
-      // typed-map twin of simhashMixedCol (bit-identical by construction,
-      // pinned by EventStreamsSpec's streaming/batch agreement): the
-      // Column fold is an interpreted HOF over every token × 16 bits —
-      // measured ~2 s single-threaded at sf0.1 — where the compiled loop
-      // is milliseconds; fanOut spreads the one-split scan first. The
-      // Option[Long] keeps the Column twin's NULL propagation (NULL text
-      // → NULL simhash → 4 NULL band rows), and with the fold gone the
-      // CollapseProject persist barrier is no longer needed.
+      // the compiled simhash loop (an interpreted Column fold over every
+      // token × 16 bits measured ~2 s single-threaded at sf0.1); fanOut
+      // spreads the one-split scan first. The Option[Long] keeps SQL's
+      // NULL propagation (NULL text → NULL simhash → 4 NULL band rows).
       val sh = QueryDef.fanOut(
           s.read.parquet(s"$dir/documents.parquet").select(col("doc_id"), col("text")),
           "doc_id")
         .as[(Long, String)]
         .mapPartitions(_.map { case (id, t) =>
-          (id, if (t == null) None else Some(simhashMixedScala(t)))
+          (id, Option(t).map(simhashScala(_, knuthMix)))
         })
         .toDF("doc_id", "simhash")
       val claims = sh
@@ -292,14 +257,20 @@ object Dedup {
     """.trim)
   )
 
-  /** The q21 operator over documents (plan notes on [[simhashCol]]); the
-    * only Exchange in the plan is the final orderBy. */
+  /** The q21 operator over documents: the raw-feature simhash as one
+    * typed map, NULL text kept a NULL simhash; the only Exchange in the
+    * plan is the final orderBy. */
   val q21Simhash = QueryDef(
     "q21_simhash",
-    (s, dir) =>
+    (s, dir) => {
+      import s.implicits._
       s.read.parquet(s"$dir/documents.parquet")
-        .select(col("doc_id"), simhashCol(col("text")).as("simhash"))
-        .orderBy("doc_id"),
+        .select(col("doc_id"), col("text"))
+        .as[(Long, String)]
+        .map { case (id, t) => (id, Option(t).map(simhashScala(_, rawFeature))) }
+        .toDF("doc_id", "simhash")
+        .orderBy("doc_id")
+    },
     Some(s"""
       WITH w AS (SELECT doc_id, ${fw("u.w")} AS f
                  FROM documents, unnest(regexp_split_to_array(trim(text), '\\s+')) AS u(w)),
@@ -378,12 +349,6 @@ object Dedup {
       FROM p ORDER BY id1, id2
     """.trim)
   )
-
-  // phase hooks for graft.queries.PhaseProbe (bench tooling only)
-  private[queries] def probePairsWithJaccard(s: SparkSession, dir: String): DataFrame =
-    pairsWithJaccard(s, dupCorpus(s, dir))
-  private[queries] def probeCc(s: SparkSession, dir: String): DataFrame =
-    connectedComponents(verifiedPairs(s, dupCorpus(s, dir), 800L))
 
   /** Verified near-dup edges over a corpus: LSH candidate pairs whose
     * token-set Jaccard clears `jmilliMin` per-mille. */

@@ -27,18 +27,6 @@ object Similarity {
         (x, y) => (x.cast("double") - y.cast("double")) * (x.cast("double") - y.cast("double"))),
       lit(0.0), (acc, v) => acc + v)
 
-  /** The coarse quantizer as ONE broadcastable row: cells are the first
-    * k vectors (deterministic "sample"), packed into a sorted
-    * array<struct<cid, ce>> so assignment is a row-local fold — no
-    * explode, no join-per-dimension, zero shuffle on the corpus side.
-    * k ~ √n keeps cell population ~√n (the IVF balance point); at real
-    * scale k is a trained codebook of bounded size, same plan shape.
-    */
-  private[queries] def centroidArray(e: org.apache.spark.sql.DataFrame, k: Long) =
-    e.filter(col("vec_id") < k)
-      .select(col("vec_id").as("cid"), transform(col("embedding"), x => x.cast("double")).as("ce"))
-      .agg(array_sort(collect_list(struct(col("cid"), col("ce")))).as("cents"))
-
   /** Top-3 nearest cells per row: the centroid array is first mapped ONCE
     * into small (d, cid) structs — one sqDist evaluation per centroid —
     * then an ordered fold over those scalar pairs keeps the running
@@ -92,8 +80,9 @@ object Similarity {
     * to the two-level quantizer (exact within probed super-cells). */
   private[queries] val MaxFlatTableCells = 65536L
 
-  /** Assignment plan ladder by codebook size: one-row broadcast fold
-    * (k ≤ 4096, zero extra rows) → centroid-TABLE join (exact, O(n·k)
+  /** Assignment plan ladder by codebook size: typed map against a
+    * broadcast driver-side codebook (k ≤ 4096, zero extra rows) →
+    * centroid-TABLE join (exact, O(n·k)
     * candidate rows, WindowGroupLimit-pruned) → two-level quantizer
     * (O(n·√k), the only tractable shape at 10^6+ cells; approximate in
     * the standard IVF sense). All three agree bit-for-bit where their
@@ -112,8 +101,9 @@ object Similarity {
     * nested-loop join carrying only (vec_id, cid, d26) — never the
     * embedding — and the per-vector top-3 is a rank window whose
     * WindowGroupLimit prunes to 3 rows per vector BEFORE the exchange.
-    * Same (d26 asc, cid asc) ranking as the fold, so the assignment is
-    * bit-identical to the broadcast path (asserted by SimilaritySpec).
+    * Same (d26 asc, cid asc) ranking and distance arithmetic as the
+    * broadcast path's [[scalaTopK]], so the assignment and norm are
+    * bit-identical to it (asserted by SimilaritySpec).
     * At 10^6+ cells a real deployment adds a two-level quantizer (route
     * to √k super-cells first) — this plan is the building block for it.
     */
@@ -208,34 +198,13 @@ object Similarity {
     top3FromPairs(e, d)
   }
 
-  /** Assign every vector against a one-row broadcast codebook, routing on
-    * the `by` column (raw embeddings, or their normalized twin for a
-    * spherical quantizer) while the output always carries the ORIGINAL
-    * embedding + its norm for cosine ranking downstream. The persist sits
-    * IMMEDIATELY after `best` is computed: without the barrier,
-    * CollapseProject inlines the whole top-3 aggregate into each of the
-    * four field extractions below (4× the arithmetic — the CLAUDE.md
-    * multi-use-array rule). Consumers reuse the cached assignment.
-    */
-  private[queries] def assignAgainst(e: org.apache.spark.sql.DataFrame, cents: org.apache.spark.sql.DataFrame,
-      by: String = "embedding"): org.apache.spark.sql.DataFrame =
-    e.crossJoin(cents)
-      .select(col("vec_id"), col("embedding"),
-        top3Cells(col(by), col("cents")).as("best"))
-      .persist()
-      .select(col("vec_id"), col("embedding"),
-        col("best").getField("c1").as("home"),
-        array(col("best").getField("c1"), col("best").getField("c2"),
-          col("best").getField("c3")).as("probes"),
-        sqrt(dot(col("embedding"), col("embedding"))).as("nrm"))
-
-  // ---- typed-map twin of the broadcast assignment ------------------------
+  // ---- typed-map broadcast assignment -------------------------------------
   // Higher-order Column functions are interpreted (no codegen, no CSE);
   // for the hot O(n·k·dim) assignment a plain Scala loop is ~10× cheaper
-  // at IDENTICAL arithmetic: same elementwise float→double widening, same
-  // left-to-right fold, same HALF_UP 6-decimal rounding (the exact
-  // BigDecimal path Spark's Round takes on doubles), same strict-<
-  // ascending-cid tie rule. SimilaritySpec asserts both paths agree
+  // at the table path's arithmetic: same elementwise float→double
+  // widening, same left-to-right fold, same HALF_UP 6-decimal rounding
+  // (the exact BigDecimal path Spark's Round takes on doubles), same
+  // (d26, cid) order. SimilaritySpec asserts the two paths agree
   // bit-for-bit; the DuckDB oracle gate re-proves it per round.
 
   private def round6(x: Double): Double =
@@ -247,8 +216,8 @@ object Similarity {
   // query (guide §4.1: prefer code the engine can compile). Arithmetic
   // is IDENTICAL to the folds they replace: the same float→double
   // widening per element, the same left-to-right summation order per
-  // accumulator, the same HALF_UP 6-decimal round — the established
-  // assignScala/scalaTopK equivalence discipline (SimilaritySpec).
+  // accumulator, the same HALF_UP 6-decimal round — the
+  // assignScala/table-path equivalence discipline (SimilaritySpec).
 
   /** Ordered dot product with float→double widening per element. */
   private def dotD(a: Array[Float], b: Array[Float]): Double = {
@@ -334,7 +303,7 @@ object Similarity {
                                             embedding: Array[Float], ne: Array[Double])
 
   /** mapPartitions assignment against a driver-side codebook: the same
-    * (vec_id, embedding, home, probes, nrm) contract as [[assignAgainst]].
+    * (vec_id, embedding, home, probes, nrm) contract as [[top3FromPairs]].
     */
   private[queries] def assignScala(e: org.apache.spark.sql.DataFrame,
       cents: Array[(Long, Array[Double])], by: String = "embedding",

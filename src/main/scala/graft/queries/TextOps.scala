@@ -39,9 +39,11 @@ object TextOps {
     * the empty token, matching ascii('') = 0 in both engines) — the
     * ONE definition every typed-map hash path shares (minhash,
     * simhash, window hashes); a feature change applied anywhere else
-    * would silently diverge the oracles of whichever path was missed. */
+    * would silently diverge the oracles of whichever path was missed.
+    * Both parts count code points, as Spark's and DuckDB's length() and
+    * ascii() do: a char above U+FFFF is one, not two UTF-16 units. */
   private[graft] def wordFeatureScala(w: String): Long =
-    31L * w.length + (if (w.isEmpty) 0L else w.codePointAt(0).toLong)
+    31L * w.codePointCount(0, w.length) + (if (w.isEmpty) 0L else w.codePointAt(0).toLong)
 
   /** Scala twin of q16's positional fingerprint — Σ (i+1)·wordFeature
     * mod 1e9+7 over the whitespace tokens. The ONE combiner every

@@ -104,10 +104,9 @@ object EventStreams {
     val spark = pages.sparkSession
     import spark.implicits._
     // typed map, not Column HOFs: no persist barrier exists on a stream,
-    // so CollapseProject would re-evaluate the simhash vote fold once
-    // per band element (the q42 batch twin needed a barrier for this);
-    // the Scala twin computes it exactly once per document. NULL text
-    // mirrors the batch twin's Column null semantics: NULL simhash →
+    // so CollapseProject would re-evaluate a Column simhash fold once per
+    // band element; the typed map computes it exactly once per document.
+    // NULL text mirrors batch q42's null semantics: NULL simhash →
     // simhashBands yields 4 NULL elements → posexplode emits 4 rows
     // with NULL band_val, so every NULL-text doc competes in the same
     // four NULL buckets (first one claims them, the rest lose) — the
@@ -119,7 +118,7 @@ object EventStreams {
         val bands: IndexedSeq[Option[Long]] =
           if (text == null) IndexedSeq.fill(4)(None)
           else {
-            val sh = graft.queries.Dedup.simhashMixedScala(text)
+            val sh = graft.queries.Dedup.simhashScala(text, graft.queries.Dedup.knuthMix)
             (0 until 4).map(i => Some((sh >> (4 * i)) & 15L))
           }
         bands.zipWithIndex.map { case (bv, i) => (id, ts, i, bv) }
@@ -151,7 +150,7 @@ object EventStreams {
     * lateness caveat on [[bandClaimsStream]] — a late dup of an
     * expired original claims spuriously; a late doc may also be
     * suppressed by surviving state). This pass recomputes their bands
-    * with the integer-exact Scala twin and awards each band iff (a) no claim
+    * with the integer-exact simhash loop and awards each band iff (a) no claim
     * by a NON-late document holds that (band_idx, band_val) key
     * anywhere in the sink's history — the late docs' own spurious sink
     * claims must not count, or a late unique would lose its bands to
@@ -183,7 +182,7 @@ object EventStreams {
                     idCol: String = "doc_id"): DataFrame = {
     val spark = lateDocs.sparkSession
     import spark.implicits._
-    // the typed Scala twin, exactly as the stream computes bands: one
+    // the typed simhash map, exactly as the stream computes bands: one
     // simhash evaluation per doc with no persist barrier needed (a
     // Column-HOF version would need a .persist() that a repeatedly-
     // called reconciliation pass would leak), and the stream's NULL
@@ -195,7 +194,7 @@ object EventStreams {
         val bands: IndexedSeq[Option[Long]] =
           if (text == null) IndexedSeq.fill(4)(None)
           else {
-            val sh = graft.queries.Dedup.simhashMixedScala(text)
+            val sh = graft.queries.Dedup.simhashScala(text, graft.queries.Dedup.knuthMix)
             (0 until 4).map(i => Some((sh >> (4 * i)) & 15L))
           }
         bands.zipWithIndex.map { case (bv, i) => (id, i, bv) }

@@ -1,0 +1,37 @@
+package graft.bench
+
+import org.apache.spark.sql.functions.{lit, raise_error}
+import org.scalatest.funsuite.AnyFunSuite
+import graft.{SparkEntry, SparkTestSession}
+
+/** `Probe exec` must never drop evidence silently: every SQL execution
+  * the listener bus ends is in the capture with its duration, and a
+  * failed action leaves a FAILED block instead of a clean-looking file.
+  */
+class ProbeSpec extends AnyFunSuite {
+  private lazy val spark = SparkTestSession.spark
+
+  private def headers(c: Probe.Capture) =
+    c.text.linesIterator.filter(_.startsWith("==== execution")).toVector
+
+  test("exec captures every q38 execution with its duration, then the final plan") {
+    val c = Probe.capture(spark, SparkEntry.queries("q38_dedup_clusters")(_, "/root/testdata/sf0.001"))
+    spark.catalog.clearCache()
+    assert(c.error.isEmpty && c.settled, c.toString.take(2000))
+    assert(c.captured == c.ended, s"captured ${c.captured} of ${c.ended} ended executions")
+    val hs = headers(c)
+    assert(hs.length == c.captured)
+    // the eager checkpoint rounds plus the query's own count()
+    assert(hs.length >= 2, hs.mkString("\n"))
+    hs.foreach(h => assert(h.matches("==== execution \\d+: action=\\S+ duration=\\d+\\.\\d{3} ms ===="), h))
+    assert(c.text.contains("==== final plan (returned DataFrame) ===="))
+  }
+
+  test("exec leaves a FAILED block when the query's action fails") {
+    val c = Probe.capture(spark, s => s.range(1).toDF().filter(raise_error(lit("probe test failure")).isNull))
+    assert(c.error.exists(_.contains("probe test failure")), c.error.toString)
+    assert(c.captured == c.ended, s"captured ${c.captured} of ${c.ended} ended executions")
+    assert(headers(c).exists(_.startsWith("==== execution 1 FAILED: action=")), c.text)
+    assert(c.text.contains("probe test failure"))
+  }
+}

@@ -3,11 +3,11 @@ package graft.queries
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 
-/** The two IVF assignment paths must agree bit-for-bit: the broadcast
-  * one-row codebook (k ≤ MaxBroadcastCells) and the centroid-table plan
-  * that takes over past the cap. Forcing cap = 1 routes the same input
-  * through the table path; (home, probes) must match the broadcast path
-  * on every vector.
+/** The two IVF assignment paths must agree bit-for-bit: the typed map
+  * against a broadcast codebook (k ≤ MaxBroadcastCells) and the
+  * centroid-table plan that takes over past the cap. Forcing cap = 1
+  * routes the same input through the table path; (home, probes, nrm)
+  * must match the broadcast path on every vector.
   */
 class SimilaritySpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -15,33 +15,14 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("table-path assignment (k forced above the broadcast cap) matches the broadcast path") {
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
-    val viaBroadcast = Similarity.assignedDf(e) // k = ceil(sqrt(n)) <= cap
-      .select("vec_id", "home", "probes").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2))).sortBy(_._1)
-    val viaTable = Similarity.assignedDf(e, cap = 1L) // same k, table plan
-      .select("vec_id", "home", "probes").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2))).sortBy(_._1)
+    def snap(df: org.apache.spark.sql.DataFrame) =
+      df.select("vec_id", "home", "probes", "nrm").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2), r.getDouble(3))).sortBy(_._1)
+    val viaBroadcast = snap(Similarity.assignedDf(e)) // k = ceil(sqrt(n)) <= cap
+    val viaTable = snap(Similarity.assignedDf(e, cap = 1L)) // same k, table plan
     assert(viaTable.length == viaBroadcast.length && viaTable.length > 0)
     viaBroadcast.zip(viaTable).foreach { case (b, t) =>
       assert(b == t, s"assignment diverged between paths at vec_id ${b._1}: broadcast=$b table=$t")
-    }
-  }
-
-  test("typed-map assignment matches the expression-fold path bit-for-bit (incl. nrm)") {
-    // the hot path is a Scala loop (interpreted HOFs are ~10× slower);
-    // semantics must stay EXACTLY the Column-expression fold's: same
-    // float→double widening, fold order, HALF_UP round-6, tie rule
-    import org.apache.spark.sql.functions.broadcast
-    val e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    val k = math.ceil(math.sqrt(e.count().toDouble)).toLong
-    def snap(df: org.apache.spark.sql.DataFrame) =
-      df.select("vec_id", "home", "probes", "nrm").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2), r.getDouble(3))).sortBy(_._1).toSeq
-    val viaScala = snap(Similarity.assignScala(e, Similarity.collectCents(Similarity.centroidTable(e, k))))
-    val viaExpr = snap(Similarity.assignAgainst(e, broadcast(Similarity.centroidArray(e, k))))
-    assert(viaScala.length == viaExpr.length && viaScala.nonEmpty)
-    viaScala.zip(viaExpr).foreach { case (s, x) =>
-      assert(s == x, s"typed map diverged from expression fold at vec_id ${s._1}: scala=$s expr=$x")
     }
   }
 
