@@ -63,8 +63,9 @@ final class BagOfWords(sentences: IndexedSeq[String], target: IndexedSeq[Int]) {
 
   private val classes: Array[Int] = target.distinct.sorted.toArray
 
-  // L2-normalized class centroids of the training tf-idf vectors
-  private val centroids: Map[Int, Array[Double]] = classes.map { c =>
+  // L2-normalized class centroids of the training tf-idf vectors, built
+  // on first use: only predictCentroid reads them
+  private lazy val centroids: Map[Int, Array[Double]] = classes.map { c =>
     val members = sentences.indices.filter(target(_) == c)
     val acc = new Array[Double](idf.length)
     members.foreach { m =>

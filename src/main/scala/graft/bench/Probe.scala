@@ -181,7 +181,7 @@ object Probe {
       "q03_join_enrich" -> "dimension tables broadcast; one shuffle join on the fact key",
       "q04_antijoin_resume" -> "LEFT ANTI join — the resume/skip-if-computed shape",
       "q18_exact_dedup" -> "one shuffle on the content hash (exact dedup)",
-      "q23_cosine_topk" -> "query side broadcast; candidates stream map-only into per-query top-k",
+      "q23_cosine_topk" -> "query side broadcast; norms once per vector before the join; cos6 scores each pair in a Project; WindowGroupLimit keeps 3 per query before the window's Exchange",
       "q25_ivf_assign" -> "centroid side broadcast (IVF assignment, O(n·k) not O(n²))",
       "q20_lsh_buckets" -> "one typed signature map feeding a single posexplode Generate (no recompute)",
       "q21_simhash" -> "row-local typed simhash map — zero Exchange before the final orderBy",

@@ -171,9 +171,6 @@ object ScalingBench {
     RunResult(cores, nPages, wall, n / wall, digest)
   }
 
-  /** Pure-CPU thread-scaling probe (one sample, ~1 s per level): how well
-    * THIS box scales compute-bound threads lo→hi right now. Sampled every
-    * round so normalization shares the extraction runs' noise window. */
   /** Matched-window MEMORY-BANDWIDTH ceiling, the analog of [[cpuProbe]]
     * for the resource that actually caps 32-thread extraction on this
     * box. r6 forensics: rounds with ~zero external CPU and ~zero steal
@@ -225,6 +222,9 @@ object ScalingBench {
     (gbps(hi) / gbps(lo)) / (hi.toDouble / lo)
   }
 
+  /** Pure-CPU thread-scaling probe (one sample, ~1 s per level): how well
+    * THIS box scales compute-bound threads lo→hi right now. Sampled every
+    * round so normalization shares the extraction runs' noise window. */
   def cpuProbe(lo: Int, hi: Int): Double = {
     def gops(t: Int): Double = {
       val iters = 500000000L

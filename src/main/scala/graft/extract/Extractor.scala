@@ -41,27 +41,32 @@ object Extractor {
     try {
       if (htmlBytes == null || htmlBytes.isEmpty)
         return failure(url, "empty-input")
-      // when the size cap cuts inside a multibyte UTF-8 sequence, back
-      // off up to 3 bytes so the truncated page still strict-decodes:
-      // without the trim a >cap UTF-8 page cut mid-codepoint failed the
-      // sniff's strict confirmation and the WHOLE document fell back to
-      // windows-1252 (r6 advice item 2 — the old lenient decode only
-      // corrupted the one trailing character)
-      val sliced =
-        if (htmlBytes.length > cfg.maxHtmlBytes)
-          trimIncompleteUtf8(java.util.Arrays.copyOf(htmlBytes, cfg.maxHtmlBytes))
-        else htmlBytes
-      // charset-sniffed decode (BOM \u2192 meta \u2192 UTF-8 sniff \u2192 cp1252, see
-      // CharsetSniff) \u2014 for valid UTF-8 this is the same intrinsic
-      // decode as before plus one U+FFFD scan, so the hot path and the
-      // byte-identical digests are unchanged; then NBSP -> space at
-      // ingest, as the reference does on raw html (html2md.py:52,
-      // split_htmls_to_pages.py:69)
-      val html = CharsetSniff.decode(sliced).text.replace('\u00A0', ' ')
-      extractHtml(url, html, cfg)
+      extractHtml(url, ingest(htmlBytes, cfg), cfg)
     } catch {
       case NonFatal(e) => failure(url, Option(e.getMessage).getOrElse(e.getClass.getSimpleName))
     }
+  }
+
+  /** Page bytes → the html string every extractor reads: capped at
+    * `maxHtmlBytes`, charset-sniffed, NBSP → space. */
+  private[extract] def ingest(htmlBytes: Array[Byte], cfg: Config): String = {
+    // when the size cap cuts inside a multibyte UTF-8 sequence, back
+    // off up to 3 bytes so the truncated page still strict-decodes:
+    // without the trim a >cap UTF-8 page cut mid-codepoint failed the
+    // sniff's strict confirmation and the WHOLE document fell back to
+    // windows-1252 (r6 advice item 2 — the old lenient decode only
+    // corrupted the one trailing character)
+    val sliced =
+      if (htmlBytes.length > cfg.maxHtmlBytes)
+        trimIncompleteUtf8(java.util.Arrays.copyOf(htmlBytes, cfg.maxHtmlBytes))
+      else htmlBytes
+    // charset-sniffed decode (BOM \u2192 meta \u2192 UTF-8 sniff \u2192 cp1252, see
+    // CharsetSniff) \u2014 for valid UTF-8 this is the same intrinsic
+    // decode as before plus one U+FFFD scan, so the hot path and the
+    // byte-identical digests are unchanged; then NBSP -> space at
+    // ingest, as the reference does on raw html (html2md.py:52,
+    // split_htmls_to_pages.py:69)
+    CharsetSniff.decode(sliced).text.replace('\u00A0', ' ')
   }
 
   def extractHtml(url: String, html: String, cfg: Config = default): ExtractedDoc = {

@@ -70,9 +70,18 @@ object Outlinks {
     * tokenizer/builder are total (caps, tolerance) and the walk is a
     * pure fold. NBSP is normalized at ingest like Extractor.extract.
     */
-  def extractHtml(html: String, cfg: Extractor.Config = Extractor.default): Seq[Link] = {
+  def extractHtml(html: String, cfg: Extractor.Config = Extractor.default): Seq[Link] =
+    links(html.replace('\u00A0', ' '), cfg)
+
+  /** Page bytes through the same ingest as [[Extractor.extract]]: size
+    * cap, charset sniff (a windows-1252 page keeps its "é"), NBSP. */
+  def extract(htmlBytes: Array[Byte], cfg: Extractor.Config = Extractor.default): Seq[Link] =
+    if (htmlBytes == null || htmlBytes.isEmpty) Seq.empty
+    else links(Extractor.ingest(htmlBytes, cfg), cfg)
+
+  private def links(html: String, cfg: Extractor.Config): Seq[Link] = {
     val dom = DomBuilder.build(
-      HtmlTokenizer.tokenize(html.replace('\u00A0', ' '), cfg.maxTokens),
+      HtmlTokenizer.tokenize(html, cfg.maxTokens),
       cfg.maxDomDepth, cfg.maxDomNodes)
     val out = new ArrayBuffer[Link]()
     def walk(n: DomNode): Unit = n match {
@@ -95,8 +104,4 @@ object Outlinks {
     walk(dom)
     out.toSeq
   }
-
-  def extract(htmlBytes: Array[Byte], cfg: Extractor.Config = Extractor.default): Seq[Link] =
-    if (htmlBytes == null || htmlBytes.isEmpty) Seq.empty
-    else extractHtml(new String(htmlBytes, java.nio.charset.StandardCharsets.UTF_8), cfg)
 }

@@ -1,9 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.classic.ColumnConversions.expression
+import org.apache.spark.sql.graft.ExpressionColumn
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, FloatType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the extraction engine (SURVEY §4.2:
@@ -46,7 +49,42 @@ case class TruncateRepetitions(child: Expression)
   override def prettyName: String = "truncate_repetitions"
 }
 
+/** round6(a·b / (an·bn)): the cosine of two float vectors given their L2
+  * norms, as the DuckDB oracles compute it — each element widened
+  * float→double, the dot product folded left to right, the quotient
+  * rounded HALF_UP to 6 decimals (the BigDecimal path Spark's `round`
+  * takes on doubles). Reads the arrays in place: no encoder round-trip,
+  * no interpreted higher-order fold. CodegenFallback keeps generated
+  * code free of references to this class's members, which Janino cannot
+  * resolve under sbt's layered classloader.
+  */
+case class Cos6(a: Expression, b: Expression, an: Expression, bn: Expression)
+    extends QuaternaryExpression with ExpectsInputTypes with CodegenFallback {
+  override def first: Expression = a
+  override def second: Expression = b
+  override def third: Expression = an
+  override def fourth: Expression = bn
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(FloatType), ArrayType(FloatType), DoubleType, DoubleType)
+  override def dataType: DataType = DoubleType
+  override def nullSafeEval(x: Any, y: Any, xn: Any, yn: Any): Any = {
+    val u = x.asInstanceOf[ArrayData]
+    val v = y.asInstanceOf[ArrayData]
+    var s = 0.0
+    var i = 0
+    while (i < u.numElements()) { s += u.getFloat(i).toDouble * v.getFloat(i).toDouble; i += 1 }
+    java.math.BigDecimal.valueOf(s / (xn.asInstanceOf[Double] * yn.asInstanceOf[Double]))
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+  }
+  override protected def withNewChildrenInternal(newA: Expression, newB: Expression,
+      newAn: Expression, newBn: Expression): Cos6 = copy(newA, newB, newAn, newBn)
+}
+
 object GraftFunctions {
+  /** [[Cos6]] as a Column: `cos6(a, b, ‖a‖, ‖b‖)`. */
+  def cos6(a: Column, b: Column, an: Column, bn: Column): Column =
+    ExpressionColumn(Cos6(expression(a), expression(b), expression(an), expression(bn)))
+
   private def unary(name: String, mk: Expression => Expression)(exprs: Seq[Expression]): Expression = {
     if (exprs.length != 1)
       throw new IllegalArgumentException(

@@ -281,13 +281,6 @@ object Dedup {
     """.trim)
   )
 
-  /** Token-set Jaccard verification over the LSH candidate pairs: the
-    * standard dedup chain shingle→minhash→band→bucket→verify. Candidates
-    * are documents sharing at least one (band, bkey) bucket — so the
-    * verifier sees exactly the near-dups LSH proposes (an equi-block on
-    * metadata like (lang, n_chars) would MISS any near-dup whose length
-    * differs by one char). Bucket sizes bound the self-join fan-out.
-    */
   /** LSH candidate pairs with token-set Jaccard columns — the shared
     * verify pipeline behind q22 (reporting) and q38 (clustering). */
   private def pairsWithJaccard(s: SparkSession, d: DataFrame): DataFrame = {
@@ -319,6 +312,13 @@ object Dedup {
       .withColumn("jmilli", floor(col("inter") * 1000 / col("uni")).cast("long"))
   }
 
+  /** Token-set Jaccard verification over the LSH candidate pairs: the
+    * standard dedup chain shingle→minhash→band→bucket→verify. Candidates
+    * are documents sharing at least one (band, bkey) bucket — so the
+    * verifier sees exactly the near-dups LSH proposes (an equi-block on
+    * metadata like (lang, n_chars) would MISS any near-dup whose length
+    * differs by one char). Bucket sizes bound the self-join fan-out.
+    */
   val q22JaccardPairs = QueryDef(
     "q22_jaccard_pairs",
     (s, dir) =>

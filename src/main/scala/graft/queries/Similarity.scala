@@ -1,15 +1,17 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, SparkSession}
+import graft.functions.GraftFunctions.cos6
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 /** Similarity search over the embeddings table: brute-force cosine top-k
   * (the exactness baseline) and the IVF building blocks (centroids +
   * nearest-centroid assignment) as the scale path. Dot products are
-  * ordered left-folds (`zip_with` + `aggregate`), ranking keys are
-  * rounded, and distances go through exact decimals — so the DuckDB
-  * oracle matches bit-for-bit.
+  * ordered left-folds (`zip_with` + `aggregate`, or the same fold inside
+  * the [[graft.functions.Cos6]] expression that scores every cosine
+  * pair), ranking keys are rounded, and distances go through exact
+  * decimals — so the DuckDB oracle matches bit-for-bit.
   *
   * Scale notes: the query side of top-k is broadcast (small), candidates
   * stream map-only into a per-query top-k window; IVF assignment is a
@@ -21,6 +23,42 @@ object Similarity {
   private def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, v) => acc + v)
+
+  /** L2 norm as `sqrt(dot(v, v))` — bit-identical to [[l2]]. */
+  private def norm(v: Column): Column = sqrt(dot(v, v))
+
+  /** The one top-k rule: `rk` = row_number over `part` in `order`, kept
+    * while rk <= k. Catalyst plans this form as a WindowGroupLimit, which
+    * prunes every partition to k rows before the window's Exchange. */
+  private def topK(df: DataFrame, k: Int, part: String*)(order: Column*): DataFrame =
+    df.withColumn("rk", row_number().over(Window.partitionBy(part.map(col): _*).orderBy(order: _*)))
+      .filter(col("rk") <= k)
+
+  /** The deterministic query sample every recall evaluation uses. */
+  private val sampled: Column = col("vec_id") % 100 === 4
+
+  /** cos6 of a query/candidate pair carrying (qe, qn) and (ne, cn). */
+  private val pairCos6: Column = cos6(col("qe"), col("ne"), col("qn"), col("cn")).as("cos6")
+
+  /** Each query's top-5 (qid, nid) by cos6, ties to the lower nid. */
+  private def top5(scored: DataFrame): DataFrame =
+    topK(scored, 5, "qid")(col("cos6").desc, col("nid").asc).select("qid", "nid")
+
+  /** Candidate rows (nid, ncell, ne, cn) of an assignment. */
+  private def candRows(assigned: DataFrame): DataFrame =
+    assigned.select(col("vec_id").as("nid"), col("home").as("ncell"),
+      col("embedding").as("ne"), col("nrm").as("cn"))
+
+  /** Every (query, candidate) pair an assignment's probe lists reach,
+    * scored: (qid, qhome, nid, ppos, cos6), ppos = the probed cell's
+    * position in the query's probe list. */
+  private def probedPairs(assigned: DataFrame): DataFrame =
+    assigned.filter(sampled)
+      .select(col("vec_id").as("qid"), col("home").as("qhome"),
+        posexplode(col("probes")).as(Seq("ppos", "pcell")),
+        col("embedding").as("qe"), col("nrm").as("qn"))
+      .join(candRows(assigned), col("pcell") === col("ncell") && col("qid") =!= col("nid"))
+      .select(col("qid"), col("qhome"), col("nid"), col("ppos"), pairCos6)
 
   private def sqDist(a: Column, b: Column): Column =
     aggregate(zip_with(a, b,
@@ -65,10 +103,6 @@ object Similarity {
     })
   }
 
-  /** IVF assignment of every vector: home cell, top-3 probe list, and
-    * hoisted norm, against the ⌈√n⌉-cell broadcast quantizer. Persisted —
-    * every consumer (q31/q32/q39) reuses it across join branches.
-    */
   /** Above this many cells the one-row packed codebook stops being
     * broadcast-safe (4096 cells × 1024-dim doubles ≈ 32 MB; ⌈√n⌉ at
     * 10^12 rows would be 10^6 cells ≈ 0.5 GB in a single struct row) —
@@ -80,7 +114,10 @@ object Similarity {
     * to the two-level quantizer (exact within probed super-cells). */
   private[queries] val MaxFlatTableCells = 65536L
 
-  /** Assignment plan ladder by codebook size: typed map against a
+  /** IVF assignment of every vector: home cell, top-3 probe list, and
+    * hoisted norm, against the ⌈√n⌉-cell quantizer. Persisted — every
+    * consumer (q31/q32/q39) reuses it across join branches.
+    * Assignment plan ladder by codebook size: typed map against a
     * broadcast driver-side codebook (k ≤ 4096, zero extra rows) →
     * centroid-TABLE join (exact, O(n·k)
     * candidate rows, WindowGroupLimit-pruned) → two-level quantizer
@@ -88,8 +125,8 @@ object Similarity {
     * the standard IVF sense). All three agree bit-for-bit where their
     * regimes overlap (SimilaritySpec).
     */
-  private[queries] def assignedDf(e: org.apache.spark.sql.DataFrame,
-      cap: Long = MaxBroadcastCells): org.apache.spark.sql.DataFrame = {
+  private[queries] def assignedDf(e: DataFrame,
+      cap: Long = MaxBroadcastCells): DataFrame = {
     val k = math.ceil(math.sqrt(e.count().toDouble)).toLong
     if (k <= cap) assignScala(e, collectCents(centroidTable(e, k)))
     else if (k <= MaxFlatTableCells) assignedViaTable(e, k)
@@ -107,8 +144,8 @@ object Similarity {
     * At 10^6+ cells a real deployment adds a two-level quantizer (route
     * to √k super-cells first) — this plan is the building block for it.
     */
-  private[queries] def assignedViaTable(e: org.apache.spark.sql.DataFrame, k: Long)
-      : org.apache.spark.sql.DataFrame = {
+  private[queries] def assignedViaTable(e: DataFrame, k: Long)
+      : DataFrame = {
     val cTable = centroidTable(e, k)
     val d = e.crossJoin(broadcast(cTable))
       .select(col("vec_id").as("vid"), col("cid"),
@@ -116,7 +153,7 @@ object Similarity {
     top3FromPairs(e, d)
   }
 
-  private[queries] def centroidTable(e: org.apache.spark.sql.DataFrame, k: Long) =
+  private[queries] def centroidTable(e: DataFrame, k: Long) =
     e.filter(col("vec_id") < k)
       .select(col("vec_id").as("cid"), transform(col("embedding"), x => x.cast("double")).as("ce"))
 
@@ -124,10 +161,9 @@ object Similarity {
     * (vec_id, embedding, home, probes, nrm): rank-window top-3 with
     * WindowGroupLimit pre-shuffle pruning, embeddings joined back last so
     * the wide column never rides through the candidate explosion. */
-  private def top3FromPairs(e: org.apache.spark.sql.DataFrame, d: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val w = Window.partitionBy(col("vid")).orderBy(col("d26").asc, col("cid").asc)
-    val top = d.withColumn("rk", row_number().over(w)).filter(col("rk") <= 3)
+  private def top3FromPairs(e: DataFrame, d: DataFrame)
+      : DataFrame = {
+    val top = topK(d, 3, "vid")(col("d26").asc, col("cid").asc)
       .groupBy("vid")
       .agg(min(when(col("rk") === 1, col("cid"))).as("home"),
         array_sort(collect_list(struct(col("rk"), col("cid")))).as("rkc"))
@@ -139,7 +175,7 @@ object Similarity {
       .select(col("vec_id"), col("embedding"), col("home"),
         concat(probes0,
           array_repeat(lit(Long.MaxValue), lit(3) - size(probes0))).as("probes"),
-        sqrt(dot(col("embedding"), col("embedding"))).as("nrm"))
+        norm(col("embedding")).as("nrm"))
       .persist()
   }
 
@@ -154,15 +190,15 @@ object Similarity {
     * agreement with the flat path, and exhaustive super-probing
     * reproduces it bit-for-bit).
     */
-  private[queries] def assignedTwoLevel(e: org.apache.spark.sql.DataFrame, k: Long)
-      : org.apache.spark.sql.DataFrame = {
+  private[queries] def assignedTwoLevel(e: DataFrame, k: Long)
+      : DataFrame = {
     val k2 = math.ceil(math.sqrt(k.toDouble)).toLong
     val cTable = centroidTable(e, k)
     val superRow = broadcast(cTable.filter(col("cid") < k2)
       .agg(array_sort(collect_list(struct(col("cid"), col("ce")))).as("cents")))
     // level 1a: every centroid hangs under its single nearest super-cell
     val grouped = cTable.crossJoin(superRow)
-      .select(col("cid"), col("ce"), nearestCell(col("ce"), col("cents")).as("scid"))
+      .select(col("cid"), col("ce"), top3Cells(col("ce"), col("cents")).getField("c1").as("scid"))
     // level 1b: every vector probes its top-3 super-cells (persist barrier
     // before the field extraction — the CollapseProject rule); fanOut
     // spreads the one-split scan under the interpreted routing fold
@@ -210,46 +246,19 @@ object Similarity {
   private def round6(x: Double): Double =
     java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
-  // Compiled twins of the cosine Column expressions. zip_with/aggregate
-  // HOFs are interpreted with no codegen and no CSE, so the pairwise
-  // cosine over candidate×query joins was the hot loop of every recall
-  // query (guide §4.1: prefer code the engine can compile). Arithmetic
-  // is IDENTICAL to the folds they replace: the same float→double
-  // widening per element, the same left-to-right summation order per
-  // accumulator, the same HALF_UP 6-decimal round — the
-  // assignScala/table-path equivalence discipline (SimilaritySpec).
-
-  /** Ordered dot product with float→double widening per element. */
-  private def dotD(a: Array[Float], b: Array[Float]): Double = {
+  /** L2 norm with float→double widening, folded left to right — the
+    * typed-map norm of every assignment (the [[norm]] Column's
+    * arithmetic). */
+  private def l2(v: Array[Float]): Double = {
     var s = 0.0
     var i = 0
-    while (i < a.length) { s += a(i).toDouble * b(i).toDouble; i += 1 }
-    s
-  }
-
-  /** round6( a·b / (na·nb) ) with caller-hoisted norms — the twin of
-    * `round(dot(a,b) / (an * bn), 6)`. */
-  private def cos6Hoisted(a: Array[Float], b: Array[Float], an: Double, bn: Double): Double =
-    round6(dotD(a, b) / (an * bn))
-
-  /** round6( a·b / (‖a‖·‖b‖) ) with inline norms — the twin of
-    * `round(dot(a,b) / (sqrt(dot(a,a)) * sqrt(dot(b,b))), 6)`; the
-    * three folds each accumulate in element order exactly like the
-    * Column aggregates they replace. */
-  private def cos6Inline(a: Array[Float], b: Array[Float]): Double = {
-    var dp = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < a.length) {
-      val x = a(i).toDouble; val y = b(i).toDouble
-      dp += x * y; na += x * x; nb += y * y
-      i += 1
-    }
-    round6(dp / (math.sqrt(na) * math.sqrt(nb)))
+    while (i < v.length) { val x = v(i).toDouble; s += x * x; i += 1 }
+    math.sqrt(s)
   }
 
   /** Top-k cells by round6(squared L2), ties on ascending cid (cents
     * MUST arrive cid-ascending; strict-< insertion keeps the earlier =
-    * lower cid ahead on ties, the [[scalaTop3]] rule generalized);
+    * lower cid ahead on ties, the [[top3Cells]] fold's rule generalized);
     * absent slots stay Long.MaxValue like the fold. */
   private def scalaTopK(v: Array[Double], cents: Array[(Long, Array[Double])],
                         k: Int): Array[Long] = {
@@ -275,14 +284,11 @@ object Similarity {
     cs
   }
 
-  private def scalaTop3(v: Array[Double], cents: Array[(Long, Array[Double])]): Array[Long] =
-    scalaTopK(v, cents, 3)
-
   /** Codebook table (cid, ce) → driver array, cid-ascending. Bounded by
     * the MaxBroadcastCells cap — the "trained codebook of bounded size"
     * contract that makes a driver-side codebook legitimate at any corpus
     * scale. */
-  private[queries] def collectCents(cTable: org.apache.spark.sql.DataFrame): Array[(Long, Array[Double])] = {
+  private[queries] def collectCents(cTable: DataFrame): Array[(Long, Array[Double])] = {
     // ASSERTED, not just documented (r4 verdict): fetch one row past the
     // cap and refuse, so a misconfigured codebook fails loudly instead
     // of silently collecting a 10^6-row table onto the driver — the
@@ -294,8 +300,10 @@ object Similarity {
     rows.map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
   }
 
-  private final case class Assigned(vec_id: Long, embedding: Array[Float],
-                                    home: Long, probes: Array[Long], nrm: Double)
+  /** The assignment contract every ANN path emits. Typed maps yield it
+    * as a tuple, which generated code reads without a repo class (a case
+    * class here made Janino fall back to interpreted under sbt). */
+  private val assignedCols = Seq("vec_id", "embedding", "home", "probes", "nrm")
 
   // private[queries]: JVM-private classes fail generated SafeProjection
   // compilation outright (see SubRow)
@@ -305,9 +313,9 @@ object Similarity {
   /** mapPartitions assignment against a driver-side codebook: the same
     * (vec_id, embedding, home, probes, nrm) contract as [[top3FromPairs]].
     */
-  private[queries] def assignScala(e: org.apache.spark.sql.DataFrame,
+  private[queries] def assignScala(e: DataFrame,
       cents: Array[(Long, Array[Double])], by: String = "embedding",
-      probes: Int = 3): org.apache.spark.sql.DataFrame = {
+      probes: Int = 3): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(cents)
@@ -315,23 +323,18 @@ object Similarity {
     // jobs over this persisted pass (Lloyd rounds, codebook collects,
     // recall joins), and at bench scale 32-way persisted partitions
     // cost more in per-job task scheduling than the trivial per-row
-    // loop gains — measured +0.2-0.6 s across q40/q49/q53/q55. The
-    // pairwise scoring that WAS the hot loop is compiled now
-    // (cos6Hoisted/cos6Inline), so partition-level parallelism no
-    // longer carries the query.
+    // loop gains — measured +0.2-0.6 s across q40/q49/q53/q55. The hot
+    // loop is the pairwise Cos6 scoring downstream, not this map.
     e.select(col("vec_id"), col("embedding"), col(by).cast("array<double>").as("byv"))
       .as[(Long, Array[Float], Array[Double])]
       .mapPartitions { it =>
         val cs = bc.value
         it.map { case (vid, emb, v) =>
           val top = scalaTopK(v, cs, probes)
-          var s = 0.0
-          var j = 0
-          while (j < emb.length) { val x = emb(j).toDouble; s += x * x; j += 1 }
-          Assigned(vid, emb, top(0), top, math.sqrt(s))
+          (vid, emb, top(0), top, l2(emb))
         }
       }
-      .toDF()
+      .toDF(assignedCols: _*)
       .persist()
   }
 
@@ -362,21 +365,16 @@ object Similarity {
   val q23CosineTopk = QueryDef(
     "q23_cosine_topk",
     (s, dir) => {
-      import s.implicits._
+      // norms once per vector, before the join
       val e = s.read.parquet(s"$dir/embeddings.parquet")
-      val q = e.filter(col("vec_id") < 5).select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      val c = e.filter(col("vec_id") >= 5).select(col("vec_id").as("cid"), col("embedding").as("ce"))
-      val w = Window.partitionBy(col("qid")).orderBy(col("sim6").desc, col("cid").asc)
-      // compiled cosine twin of the interpreted fold (cos6Inline)
-      c.join(broadcast(q))
-        .select(col("qid"), col("cid"), col("qe"), col("ce"))
-        .as[(Long, Long, Array[Float], Array[Float])]
-        .mapPartitions(_.map { case (qid, cid, qe, ce) =>
-          (qid, cid, cos6Inline(qe, ce))
-        })
-        .toDF("qid", "cid", "sim6")
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 3)
+        .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("n"))
+      val q = e.filter(col("vec_id") < 5)
+        .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("n").as("qn"))
+      val c = e.filter(col("vec_id") >= 5)
+        .select(col("vec_id").as("cid"), col("embedding").as("ce"), col("n").as("cn"))
+      val scored = c.join(broadcast(q)).select(col("qid"), col("cid"),
+        cos6(col("qe"), col("ce"), col("qn"), col("cn")).as("sim6"))
+      topK(scored, 3, "qid")(col("sim6").desc, col("cid").asc)
         .select("qid", "rk", "cid", "sim6")
         .orderBy("qid", "rk")
     },
@@ -427,7 +425,7 @@ object Similarity {
     "q25_ivf_assign",
     (s, dir) => {
       val e = s.read.parquet(s"$dir/embeddings.parquet")
-      def expl(df: org.apache.spark.sql.DataFrame, idName: String) =
+      def expl(df: DataFrame, idName: String) =
         df.select(col("vec_id").as(idName), posexplode(col("embedding")).as(Seq("pos0", "v")))
           .select(col(idName), (col("pos0") + 1).as("pos"),
             round(col("v").cast("double"), 6).cast("decimal(9,6)").as("x"))
@@ -437,9 +435,7 @@ object Similarity {
       val d = v.join(c, "pos")
         .groupBy("vid", "cid")
         .agg(sum((col("vx") - col("cx")) * (col("vx") - col("cx"))).as("d2"))
-      val w = Window.partitionBy(col("vid")).orderBy(col("d2").asc, col("cid").asc)
-      d.withColumn("rk", row_number().over(w))
-        .filter(col("rk") === 1)
+      topK(d, 1, "vid")(col("d2").asc, col("cid").asc)
         .select(col("vid"), col("cid"), col("d2").cast("double").as("dist2"))
         .orderBy("vid")
     },
@@ -474,25 +470,16 @@ object Similarity {
   val q31EmbedNeardup = QueryDef(
     "q31_embed_neardup",
     (s, dir) => {
-      import s.implicits._
       // norms hoisted BEFORE the join (inside assignedDf): the exchange
       // materializes them once per vector, not once per candidate pair
       val assigned = assignedDf(s.read.parquet(s"$dir/embeddings.parquet"))
-      val a = assigned.select(col("home").as("cell"), col("vec_id").as("v1"),
-        col("embedding").as("e1"), col("nrm").as("n1"))
-      val b = assigned.select(col("home").as("cell"), col("vec_id").as("v2"),
-        col("embedding").as("e2"), col("nrm").as("n2"))
-      val w = Window.partitionBy(col("cell")).orderBy(col("cos6").desc, col("v1").asc, col("v2").asc)
-      // compiled cosine twin (cos6Hoisted) over the within-cell pairs
-      a.join(b, Seq("cell")).filter(col("v1") < col("v2"))
-        .select(col("cell"), col("v1"), col("v2"), col("e1"), col("e2"), col("n1"), col("n2"))
-        .as[(Long, Long, Long, Array[Float], Array[Float], Double, Double)]
-        .mapPartitions(_.map { case (cell, v1, v2, e1, e2, n1, n2) =>
-          (cell, v1, v2, cos6Hoisted(e1, e2, n1, n2))
-        })
-        .toDF("cell", "v1", "v2", "cos6")
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 3)
+      def side(v: String, e: String, n: String) = assigned.select(col("home").as("cell"),
+        col("vec_id").as(v), col("embedding").as(e), col("nrm").as(n))
+      val scored = side("v1", "e1", "n1").join(side("v2", "e2", "n2"), Seq("cell"))
+        .filter(col("v1") < col("v2"))
+        .select(col("cell"), col("v1"), col("v2"),
+          cos6(col("e1"), col("e2"), col("n1"), col("n2")).as("cos6"))
+      topK(scored, 3, "cell")(col("cos6").desc, col("v1").asc, col("v2").asc)
         .select("cell", "rk", "v1", "v2", "cos6")
         .orderBy("cell", "rk")
     },
@@ -523,24 +510,8 @@ object Similarity {
   val q32IvfSearch = QueryDef(
     "q32_ivf_search",
     (s, dir) => {
-      import s.implicits._
       val assigned = assignedDf(s.read.parquet(s"$dir/embeddings.parquet"))
-      val qs = assigned.filter(col("vec_id") % 100 === 4) // deterministic query subset
-        .select(col("vec_id").as("qid"), col("home").as("qhome"),
-          explode(col("probes")).as("pcell"), col("embedding").as("qe"), col("nrm").as("qn"))
-      val cands = assigned.select(col("vec_id").as("nid"), col("home").as("ncell"),
-        col("embedding").as("ne"), col("nrm").as("cn"))
-      val w2 = Window.partitionBy(col("qid")).orderBy(col("cos6").desc, col("nid").asc)
-      // compiled cosine twin (cos6Hoisted) over the probed-cell pairs
-      qs.join(cands, col("pcell") === col("ncell") && col("qid") =!= col("nid"))
-        .select(col("qid"), col("qhome"), col("nid"), col("qe"), col("ne"), col("qn"), col("cn"))
-        .as[(Long, Long, Long, Array[Float], Array[Float], Double, Double)]
-        .mapPartitions(_.map { case (qid, qhome, nid, qe, ne, qn, cn) =>
-          (qid, qhome, nid, cos6Hoisted(qe, ne, qn, cn))
-        })
-        .toDF("qid", "qhome", "nid", "cos6")
-        .withColumn("rk", row_number().over(w2))
-        .filter(col("rk") === 1)
+      topK(probedPairs(assigned), 1, "qid")(col("cos6").desc, col("nid").asc)
         .select(col("qid"), col("qhome").as("cell"), col("nid"), col("cos6"))
         .orderBy("qid")
     },
@@ -561,68 +532,33 @@ object Similarity {
     """.trim)
   )
 
-  /** ANN quality evaluation: recall@5 of the IVF-routed search against
-    * the exact brute-force top-5 — THE standard ANN metric, answering
-    * "what did probe-3 over ⌈√n⌉ cells cost in accuracy". The exact
-    * baseline broadcasts the (sampled) query side against all candidates
-    * — an eval-only pass over a query SAMPLE, not the corpus × corpus
-    * join. Ranking ties break on (cos6 desc, nid) on both engines, so
-    * the whole evaluation is bit-exact against DuckDB.
-    */
   /** The exact brute-force top-5 baseline (qid, nid) over the query
-    * sample — independent of the probes column, so a probe sweep can
-    * compute it ONCE and share it across budgets. */
-  private def exactTop5(assigned: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val spark = assigned.sparkSession
-    import spark.implicits._
-    val cands = assigned.select(col("vec_id").as("nid"),
-      col("embedding").as("ne"), col("nrm").as("cn"))
-    val wq = Window.partitionBy(col("qid")).orderBy(col("cos6").desc, col("nid").asc)
-    val qsE = assigned.filter(col("vec_id") % 100 === 4)
+    * sample of any (vec_id, embedding, nrm) table — independent of the
+    * probes column, so a probe sweep can compute it ONCE and share it
+    * across budgets. The (sampled) query side is broadcast against all
+    * candidates: an eval-only pass over a query SAMPLE, not the
+    * corpus × corpus join. */
+  private def exactTop5(assigned: DataFrame): DataFrame = {
+    val qsE = assigned.filter(sampled)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nrm").as("qn"))
-    // compiled cosine (cos6Hoisted) over the candidate × query pairs —
-    // the brute-force baseline is the widest pair set every recall
-    // query pays; the interpreted fold here dominated their runtime
-    cands.join(broadcast(qsE), col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"), col("qe"), col("ne"), col("qn"), col("cn"))
-      .as[(Long, Long, Array[Float], Array[Float], Double, Double)]
-      .mapPartitions(_.map { case (qid, nid, qe, ne, qn, cn) =>
-        (qid, nid, cos6Hoisted(qe, ne, qn, cn))
-      })
-      .toDF("qid", "nid", "cos6")
-      .withColumn("rk", row_number().over(wq)).filter(col("rk") <= 5)
-      .select(col("qid"), col("nid"))
+    val cands = assigned.select(col("vec_id").as("nid"), col("embedding").as("ne"), col("nrm").as("cn"))
+    top5(cands.join(broadcast(qsE), col("qid") =!= col("nid")).select(col("qid"), col("nid"), pairCos6))
   }
 
-  /** recall@5 evaluation over any assignment (home + probes + nrm): IVF
-    * candidates from probed cells vs the exact broadcast baseline —
-    * computed here unless the caller passes a precomputed (persisted)
-    * one. */
-  private def recallFromAssigned(assigned: org.apache.spark.sql.DataFrame,
-      exactOpt: Option[org.apache.spark.sql.DataFrame] = None)
-      : org.apache.spark.sql.DataFrame = {
-    val spark = assigned.sparkSession
-    import spark.implicits._
-    val cands = assigned.select(col("vec_id").as("nid"), col("home").as("ncell"),
-      col("embedding").as("ne"), col("nrm").as("cn"))
-    val wq = Window.partitionBy(col("qid")).orderBy(col("cos6").desc, col("nid").asc)
-    val qsP = assigned.filter(col("vec_id") % 100 === 4)
-      .select(col("vec_id").as("qid"), explode(col("probes")).as("pcell"),
-        col("embedding").as("qe"), col("nrm").as("qn"))
-    val ivf = qsP.join(cands, col("pcell") === col("ncell") && col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"), col("qe"), col("ne"), col("qn"), col("cn"))
-      .as[(Long, Long, Array[Float], Array[Float], Double, Double)]
-      .mapPartitions(_.map { case (qid, nid, qe, ne, qn, cn) =>
-        (qid, nid, cos6Hoisted(qe, ne, qn, cn))
-      })
-      .toDF("qid", "nid", "cos6")
-      .withColumn("rk", row_number().over(wq)).filter(col("rk") <= 5)
-      .select(col("qid"), col("nid"))
-    val exact = exactOpt.getOrElse(exactTop5(assigned))
-    recallScore(assigned.filter(col("vec_id") % 100 === 4)
-      .select(col("vec_id").as("qid")), ivf, exact)
-  }
+  /** ANN quality evaluation: recall@5 of the IVF-routed search against
+    * the exact brute-force top-5 — THE standard ANN metric, answering
+    * "what did probe-3 over ⌈√n⌉ cells cost in accuracy". Works over
+    * any assignment (home + probes + nrm): candidates from probed cells
+    * vs [[exactTop5]]. Ranking ties break on (cos6 desc, nid) on both
+    * engines, so the whole evaluation is bit-exact against DuckDB.
+    */
+  private def recallFromAssigned(assigned: DataFrame): DataFrame =
+    recallVsExact(assigned, top5(probedPairs(assigned)))
+
+  /** recall@5 rows of `pred` against [[exactTop5]] of the same
+    * (vec_id, embedding, nrm) table, over its query sample. */
+  private def recallVsExact(table: DataFrame, pred: DataFrame): DataFrame =
+    recallScore(table.filter(sampled).select(col("vec_id").as("qid")), pred, exactTop5(table))
 
   /** The recall-evaluation CTE tail shared by q39/q40: expects `home` and
     * `probes` CTEs from the preceding assignment chain. */
@@ -649,20 +585,6 @@ object Similarity {
     """.trim)
   )
 
-  /** Nearest single cell (argmin) by the same rounded-distance /
-    * ascending-cid tie rule as [[top3Cells]] — the Lloyd-iteration inner
-    * step. One sqDist per centroid via the transform, scalar fold after.
-    */
-  private def nearestCell(emb: Column, cents: Column): Column = {
-    val dists = transform(cents, c =>
-      struct(round(sqDist(emb, c.getField("ce")), 6).as("d"), c.getField("cid").as("cid")))
-    aggregate(dists,
-      struct(lit(Double.MaxValue).as("d1"), lit(Long.MaxValue).as("c1")),
-      (acc, c) => when(c.getField("d") < acc.getField("d1"),
-        struct(c.getField("d").as("d1"), c.getField("cid").as("c1"))).otherwise(acc))
-      .getField("c1")
-  }
-
   /** One Lloyd iteration over a driver-side codebook (the k-means-on-
     * Spark norm, bounded by the MaxBroadcastCells contract): assign
     * every normalized vector to its nearest cell (broadcast typed map,
@@ -676,7 +598,7 @@ object Similarity {
     * paid a join + persist per round for the keep-previous merge, which
     * is a k-row Map.getOrElse).
     */
-  private def lloydRound(en: org.apache.spark.sql.DataFrame,
+  private def lloydRound(en: DataFrame,
       cents: Array[(Long, Array[Double])]): Array[(Long, Array[Double])] = {
     val spark = en.sparkSession
     import spark.implicits._
@@ -684,7 +606,7 @@ object Similarity {
     val assigned = en.select(col("vec_id"), col("ne")).as[(Long, Array[Double])]
       .mapPartitions { it =>
         val cs = bc.value
-        it.map { case (vid, v) => (vid, v, scalaTop3(v, cs)(0)) }
+        it.map { case (vid, v) => (vid, v, scalaTopK(v, cs, 1)(0)) }
       }
       .toDF("vec_id", "ne", "cell")
     val means = assigned.select(col("cell"), posexplode(col("ne")).as(Seq("pos0", "v")))
@@ -699,21 +621,6 @@ object Similarity {
     cents.map { case (cid, ce) => (cid, updated.getOrElse(cid, ce)) }
   }
 
-  /** L2-normalize + first-⌈√n⌉ init + 3 exact-decimal Lloyd rounds, then
-    * the broadcast-codebook assignment with `probes` probed cells — the
-    * trained quantizer shared by q40 and the q49 probe sweep. This is
-    * the r3-verdict composition of the two previously separate halves:
-    * the TRAINED codebook (Lloyd on normalized coordinates) at the
-    * ⌈√n⌉ SIZE the search path scales with — a fixed label-count
-    * codebook's recall decays as n grows (r3 measured 0.84 → 0.58 from
-    * sf0.01 to sf0.1), while cell count ~ √n keeps both the probe
-    * fraction and the per-cell population balanced. k is capped at
-    * MaxBroadcastCells — the bounded-codebook contract that keeps the
-    * per-round driver-side collect legitimate; past the cap a real
-    * deployment trains each level of the q41 two-level quantizer on a
-    * corpus sample (super-cells first, then per-super-cell residuals),
-    * which keeps every training collect under the same bound.
-    */
   /** Normalized, 6-decimal-rounded coordinates beside the original
     * embedding — THE normalization definition (its SQL twin is
     * [[normSql]]), shared by the trained quantizer and the PQ chain so
@@ -723,7 +630,7 @@ object Similarity {
     * lambda would evaluate it once PER ELEMENT (interpreted HOFs have
     * no CSE) — O(dim²) per row.
     */
-  private def normRows(e: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  private def normRows(e: DataFrame): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
     // no fanOut (see assignScala): many small downstream jobs make
@@ -756,9 +663,24 @@ object Similarity {
                                  y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)))) AS nrm
                         FROM embeddings))"""
 
+  /** L2-normalize + first-⌈√n⌉ init + 3 exact-decimal Lloyd rounds, then
+    * the broadcast-codebook assignment with `probes` probed cells — the
+    * trained quantizer shared by q40 and the q49 probe sweep. This is
+    * the r3-verdict composition of the two previously separate halves:
+    * the TRAINED codebook (Lloyd on normalized coordinates) at the
+    * ⌈√n⌉ SIZE the search path scales with — a fixed label-count
+    * codebook's recall decays as n grows (r3 measured 0.84 → 0.58 from
+    * sf0.01 to sf0.1), while cell count ~ √n keeps both the probe
+    * fraction and the per-cell population balanced. k is capped at
+    * MaxBroadcastCells — the bounded-codebook contract that keeps the
+    * per-round driver-side collect legitimate; past the cap a real
+    * deployment trains each level of the q41 two-level quantizer on a
+    * corpus sample (super-cells first, then per-super-cell residuals),
+    * which keeps every training collect under the same bound.
+    */
   private def trainedAssignedDf(s: SparkSession, dir: String, probes: Int,
-      norm: Option[org.apache.spark.sql.DataFrame] = None)
-      : org.apache.spark.sql.DataFrame = {
+      norm: Option[DataFrame] = None)
+      : DataFrame = {
     // callers that already normalized (q55 shares one pass between the
     // coarse quantizer and the PQ stage) pass it in — mirroring the
     // oracle side, where pqChainSql("en") reuses the trained chain's CTE
@@ -969,7 +891,7 @@ object Similarity {
       val half = math.min(scanTargetProbes(k, 0.5), cap)
       val aAll = trainedAssignedDf(s, dir, probes = half, norm = Some(norm))
       val exact = exactTop5(aAll).persist() // shared across the three budgets
-      // ONE candidate join + ONE compiled cosine pass serves every
+      // ONE candidate join + ONE cosine pass serves every
       // budget: a candidate's home is a single cell and the probe list
       // is distinct cells, so each (qid, nid) pair appears at exactly
       // one probe position — "assignment sliced to the first p probes"
@@ -977,28 +899,10 @@ object Similarity {
       // re-score collapses into a filter over one scored pair set
       // (bounded: query sample × probed candidates, the eval working
       // set the sweep already materializes per budget).
-      import s.implicits._
-      val cands = aAll.select(col("vec_id").as("nid"), col("home").as("ncell"),
-        col("embedding").as("ne"), col("nrm").as("cn"))
-      val qsP = aAll.filter(col("vec_id") % 100 === 4)
-        .select(col("vec_id").as("qid"),
-          posexplode(col("probes")).as(Seq("ppos", "pcell")),
-          col("embedding").as("qe"), col("nrm").as("qn"))
-      val scored = qsP.join(cands, col("pcell") === col("ncell") && col("qid") =!= col("nid"))
-        .select(col("qid"), col("nid"), col("ppos"), col("qe"), col("ne"), col("qn"), col("cn"))
-        .as[(Long, Long, Int, Array[Float], Array[Float], Double, Double)]
-        .mapPartitions(_.map { case (qid, nid, ppos, qe, ne, qn, cn) =>
-          (qid, nid, ppos, cos6Hoisted(qe, ne, qn, cn))
-        })
-        .toDF("qid", "nid", "ppos", "cos6")
-        .persist()
-      val wq = Window.partitionBy(col("qid")).orderBy(col("cos6").desc, col("nid").asc)
-      val qids = aAll.filter(col("vec_id") % 100 === 4).select(col("vec_id").as("qid"))
+      val scored = probedPairs(aAll).persist()
+      val qids = aAll.filter(sampled).select(col("vec_id").as("qid"))
       Seq(1, 3, half).map { p =>
-        val ivf = scored.filter(col("ppos") < p)
-          .withColumn("rk", row_number().over(wq)).filter(col("rk") <= 5)
-          .select(col("qid"), col("nid"))
-        recallScore(qids, ivf, exact)
+        recallScore(qids, top5(scored.filter(col("ppos") < p)), exact)
           .agg(count(lit(1)).as("n_queries"),
             round(sum(col("recall5").cast("decimal(9,6)")).cast("double") / count(lit(1)), 6)
               .as("mean_recall5"))
@@ -1043,13 +947,13 @@ object Similarity {
 
   /** Random-hyperplane LSH bucketing with 1-bit-flip multiprobe: the
     * sign pattern of `bits` hyperplane dots is the bucket; probes are
-    * the bucket plus its `bits` single-bit neighbors. Same Assigned
+    * the bucket plus its `bits` single-bit neighbors. Same assignment
     * contract as IVF, so the recall harness evaluates both paths
     * identically. Typed map (8 dots per row would re-embed per HOF
     * consumer otherwise); planes broadcast.
     */
-  private def assignedLsh(e: org.apache.spark.sql.DataFrame, bits: Int)
-      : org.apache.spark.sql.DataFrame = {
+  private def assignedLsh(e: DataFrame, bits: Int)
+      : DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
     val dim = e.select(size(col("embedding"))).head().getInt(0)
@@ -1071,32 +975,26 @@ object Similarity {
             if (round6(s) >= 0) b |= (1L << j)
             j += 1
           }
-          var ss = 0.0
-          var i2 = 0
-          while (i2 < emb.length) { val x = emb(i2).toDouble; ss += x * x; i2 += 1 }
-          Assigned(vid, emb, b,
-            Array(b) ++ Array.tabulate(ps.length)(k => b ^ (1L << k)), math.sqrt(ss))
+          (vid, emb, b, Array(b) ++ Array.tabulate(ps.length)(k => b ^ (1L << k)), l2(emb))
         }
       }
-      .toDF()
+      .toDF(assignedCols: _*)
       .persist()
   }
 
-  /** Data-derived LSH width: the smallest b with 2^b ≥ ⌈√n⌉, so the
-    * bucket count tracks the corpus (target bucket population ≈ √n,
-    * the same balance point IVF uses for its cell count) instead of
-    * the r3 constant 6 that stopped partitioning at any real scale.
-    * Pure integer logic — no floating log2 whose boundary rounding
-    * could diverge between engines; capped at 20 bits (1M buckets:
-    * past that the Hamming-1 probe list is the thing to grow, not the
-    * plane count).
-    */
   /** Cap on the hyperplane count (2^20 = 1M buckets: past that the
     * Hamming-1 probe list is the thing to grow, not the plane count).
     * Interpolated into the oracle SQL so the two engines can never
     * disagree on the cap. */
   private[queries] val MaxLshBits = 20
 
+  /** Data-derived LSH width: the smallest b with 2^b ≥ ⌈√n⌉, so the
+    * bucket count tracks the corpus (target bucket population ≈ √n,
+    * the same balance point IVF uses for its cell count) instead of
+    * the r3 constant 6 that stopped partitioning at any real scale.
+    * Pure integer logic — no floating log2 whose boundary rounding
+    * could diverge between engines; capped at [[MaxLshBits]].
+    */
   private[queries] def lshBits(n: Long): Int = {
     val k = math.ceil(math.sqrt(n.toDouble)).toLong
     (1 to MaxLshBits).find(b => (1L << b) >= k).getOrElse(MaxLshBits)
@@ -1187,8 +1085,8 @@ object Similarity {
 
   // private[queries], not private: a JVM-private class makes the
   // generated SafeProjection fail HARD ("Private member cannot be
-  // accessed"), unlike the benign interpreted fallback the Assigned
-  // path hits — package-private compiles to public bytecode
+  // accessed"), unlike the benign interpreted fallback a repo case
+  // class gets — package-private compiles to public bytecode
   private[queries] final case class SubRow(vec_id: Long, sub: Int, sv: Array[Double])
   private[queries] final case class SubCell(vec_id: Long, sub: Int, sv: Array[Double], cell: Long)
 
@@ -1196,7 +1094,7 @@ object Similarity {
     * training/encoding input (normalization itself has ONE definition;
     * this only slices). Rows fan out m-fold but carry dim/m doubles
     * each, so total bytes are unchanged. */
-  private def pqSubRows(norm: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  private def pqSubRows(norm: DataFrame): DataFrame = {
     val spark = norm.sparkSession
     import spark.implicits._
     norm.select(col("vec_id"), col("ne")).as[(Long, Array[Double])]
@@ -1212,8 +1110,8 @@ object Similarity {
     * codebooks (8×16 = 128 centroids — driver-side by construction,
     * the bounded-codebook contract): round6 distances, strict-<,
     * ascending cid — the repo's one tie rule. */
-  private def pqAssign(sv: org.apache.spark.sql.DataFrame,
-      cents: Map[Int, Array[(Long, Array[Double])]]): org.apache.spark.sql.DataFrame = {
+  private def pqAssign(sv: DataFrame,
+      cents: Map[Int, Array[(Long, Array[Double])]]): DataFrame = {
     val spark = sv.sparkSession
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(cents)
@@ -1232,7 +1130,7 @@ object Similarity {
     * between rounds (128 entries, the bounded-codebook contract) —
     * same lloydRound rationale: the DataFrame round-trip paid a
     * collect + join + persist per round for what is a Map merge. */
-  private def pqLloydRound(sv: org.apache.spark.sql.DataFrame,
+  private def pqLloydRound(sv: DataFrame,
       cents: Map[Int, Array[(Long, Array[Double])]]): Map[Int, Array[(Long, Array[Double])]] = {
     val means = pqAssign(sv, cents)
       .select(col("sub"), col("cell"), posexplode(col("sv")).as(Seq("pos0", "v")))
@@ -1252,7 +1150,7 @@ object Similarity {
   /** Trained per-sub codebooks: first-PqKs subvectors as init, then
     * PqRounds Lloyd rounds. Init is a PqM·PqKs-row bounded collect,
     * kept cid-ascending per sub (the scalaTopK tie-rule contract). */
-  private def pqCodebook(sv: org.apache.spark.sql.DataFrame)
+  private def pqCodebook(sv: DataFrame)
       : Map[Int, Array[(Long, Array[Double])]] = {
     val cb0: Map[Int, Array[(Long, Array[Double])]] = sv.filter(col("vec_id") < PqKs)
       .select(col("sub"), col("vec_id").as("cid"), col("sv").as("ce"))
@@ -1312,8 +1210,8 @@ object Similarity {
     * same one-definition rule as the SQL chains). Compiled loop over
     * the driver-side codebook — same round6 squared-distance fold as
     * the Column form it replaces. */
-  private def pqQueryTables(sv: org.apache.spark.sql.DataFrame,
-      cents: Map[Int, Array[(Long, Array[Double])]]): org.apache.spark.sql.DataFrame = {
+  private def pqQueryTables(sv: DataFrame,
+      cents: Map[Int, Array[(Long, Array[Double])]]): DataFrame = {
     val spark = sv.sparkSession
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(cents)
@@ -1338,9 +1236,9 @@ object Similarity {
     * the exact top-5 over the given query list — ONE definition of the
     * scoring contract for every recall query (its SQL twin is
     * [[recallScoreSql]]). */
-  private def recallScore(queries: org.apache.spark.sql.DataFrame,
-      top5: org.apache.spark.sql.DataFrame, exact: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
+  private def recallScore(queries: DataFrame,
+      top5: DataFrame, exact: DataFrame)
+      : DataFrame = {
     val hits = exact.as("x")
       .join(top5.as("y"), col("x.qid") === col("y.qid") && col("x.nid") === col("y.nid"))
       .groupBy(col("x.qid").as("qid")).agg(count(lit(1)).as("hits"))
@@ -1417,26 +1315,10 @@ object Similarity {
           codes("sub") === dt("sub") && col("cell") === col("cid") && col("nid") =!= col("qid"))
         .groupBy("qid", "nid")
         .agg(sum(col("d26").cast("decimal(18,6)")).as("e"))
-      val wq = Window.partitionBy(col("qid")).orderBy(col("e").asc, col("nid").asc)
-      val pq5 = est.withColumn("rk", row_number().over(wq)).filter(col("rk") <= 5)
-        .select(col("qid"), col("nid"))
-      // exact cosine top-5 over the raw embeddings (the q39 standard);
-      // compiled cosine twin (cos6Inline) over the fanned-out candidates
-      import s.implicits._
-      val q = e.filter(col("vec_id") % 100 === 4)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      val c = e.select(col("vec_id").as("nid"), col("embedding").as("ne"))
-      val we = Window.partitionBy(col("qid")).orderBy(col("cos6").desc, col("nid").asc)
-      val exact = c.join(broadcast(q), col("qid") =!= col("nid"))
-        .select(col("qid"), col("nid"), col("qe"), col("ne"))
-        .as[(Long, Long, Array[Float], Array[Float])]
-        .mapPartitions(_.map { case (qid, nid, qe, ne) =>
-          (qid, nid, cos6Inline(qe, ne))
-        })
-        .toDF("qid", "nid", "cos6")
-        .withColumn("rk", row_number().over(we)).filter(col("rk") <= 5)
-        .select(col("qid"), col("nid"))
-      recallScore(q.select(col("qid")), pq5, exact)
+      val pq5 = topK(est, 5, "qid")(col("e").asc, col("nid").asc).select("qid", "nid")
+      // against the exact cosine top-5 over the raw embeddings (the q39
+      // standard), norms once per vector
+      recallVsExact(e.select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm")), pq5)
     },
     Some(s"""
       WITH ${pqChainSql()},
@@ -1490,7 +1372,7 @@ object Similarity {
       val codes = pqAssign(sv, cb).select(col("vec_id").as("nid"), col("sub"), col("cell"))
       val dt = pqQueryTables(sv, cb)
       // candidate pairs: docs homed in the query's probed cells
-      val qs = assigned.filter(col("vec_id") % 100 === 4)
+      val qs = assigned.filter(sampled)
         .select(col("vec_id").as("qid"), explode(col("probes")).as("pcell"))
       val cands = assigned.select(col("vec_id").as("nid"), col("home"))
       val pairs = qs.join(cands, col("pcell") === col("home") && col("qid") =!= col("nid"))
@@ -1500,31 +1382,15 @@ object Similarity {
         .join(broadcast(dt), Seq("qid", "sub")).where(col("cell") === col("cid"))
         .groupBy("qid", "nid")
         .agg(sum(col("d26").cast("decimal(18,6)")).as("adc"))
-      val ws = Window.partitionBy(col("qid")).orderBy(col("adc").asc, col("nid").asc)
-      val short = est.withColumn("rk", row_number().over(ws)).filter(col("rk") <= 50)
-        .select("qid", "nid")
-      // stage 3: exact cosine re-rank of the shortlist — compiled
-      // cosine twin (cos6Inline) of the interpreted fold
-      import s.implicits._
-      val q = e.filter(col("vec_id") % 100 === 4)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      val wr = Window.partitionBy(col("qid")).orderBy(col("cos6").desc, col("nid").asc)
-      val top5 = short
-        .join(e.select(col("vec_id").as("nid"), col("embedding").as("ne")), Seq("nid"))
+      val short = topK(est, 50, "qid")(col("adc").asc, col("nid").asc).select("qid", "nid")
+      // stage 3: exact cosine re-rank of the shortlist, with the
+      // assignment's norms (nrm is the sqrt of the same ordered fold)
+      val q = assigned.filter(sampled)
+        .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nrm").as("qn"))
+      val reranked = top5(short.join(candRows(assigned), Seq("nid"))
         .join(broadcast(q), Seq("qid"))
-        .select(col("qid"), col("nid"), col("qe"), col("ne"))
-        .as[(Long, Long, Array[Float], Array[Float])]
-        .mapPartitions(_.map { case (qid, nid, qe, ne) =>
-          (qid, nid, cos6Inline(qe, ne))
-        })
-        .toDF("qid", "nid", "cos6")
-        .withColumn("rk", row_number().over(wr)).filter(col("rk") <= 5)
-        .select("qid", "nid")
-      // score against the brute-force exact baseline — the q39-proven
-      // hoisted-norm form over the assignment already in scope
-      // (bit-identical: nrm is the sqrt of the same ordered fold)
-      val exact = exactTop5(assigned)
-      recallScore(q.select(col("qid")), top5, exact)
+        .select(col("qid"), col("nid"), pairCos6))
+      recallVsExact(assigned, reranked)
     },
     Some(s"""
       WITH $trainedChainSql,

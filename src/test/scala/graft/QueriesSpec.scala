@@ -1,7 +1,9 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.security.MessageDigest
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 
 object SparkTestSession {
   lazy val spark: SparkSession = Sessions("graft-test")
@@ -14,12 +16,47 @@ class QueriesSpec extends AnyFunSuite {
   /** Queries whose result can legitimately be empty at tiny scale. */
   private val mayBeEmpty = Set("q04_antijoin_resume", "q22_jaccard_pairs")
 
+  /** SHA-256 of the sorted rows at sf0.001 for the queries that score
+    * cosine pairs, frozen from the per-query typed-map kernels that
+    * `Cos6` replaced: the rewrite must keep every row bit-identical. */
+  private val frozenDigests = Map(
+    "q23_cosine_topk" ->
+      "3d15e2176382186801d65093949e33c44fc3d1890e1d39dbae4e9b2aea93d678",
+    "q31_embed_neardup" ->
+      "0f68f2d4a3e58deecfe29cc3178c71b8443c7f0f40374c0e7077ab5a1f7f695d",
+    "q32_ivf_search" ->
+      "35a715f74146bd356b770d802236027e3d02447a8b770be3bc8bd17e540ec505",
+    "q39_ann_recall" ->
+      "45877bcd746a4ecd33ee414c25097962d2b382afb2da7529fc2aa04a7ea8a1a1",
+    "q40_trained_recall" ->
+      "2579fdd7e2b00c23e57b63deb449a117cca12eb0bad9fa8e5867ad25fa728bdf",
+    "q49_probe_sweep" ->
+      "1f316fc468ed06794d5c37a8704b357a08fa892a5c227e243ca028e425c01d0c",
+    "q51_lsh_ann_recall" ->
+      "13b02cc65052e149c0858fb1e452c739706dc43f65447a9a1836dcbb097047c0",
+    "q54_pq_recall" ->
+      "74e82a3d84dd069fc6b009f0b8f39e060dd10684808b435f6e3efa1f0045c145",
+    "q55_ivfpq_recall" ->
+      "2579fdd7e2b00c23e57b63deb449a117cca12eb0bad9fa8e5867ad25fa728bdf")
+
+  private def rowsDigest(rows: Array[Row]): String = {
+    val md = MessageDigest.getInstance("SHA-256")
+    rows.map(_.toString).sorted.foreach(r => md.update((r + "\n").getBytes(UTF_8)))
+    md.digest().map("%02x".format(_)).mkString
+  }
+
   test("every registered query runs and returns rows at sf0.001") {
-    SparkEntry.queries.foreach { case (name, fn) =>
+    val drifted = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       val df = fn(spark, sf)
-      val n = df.count()
+      // a frozen query is collected instead of counted, so it still runs once
+      val (n, got) = frozenDigests.get(name) match {
+        case Some(_) => val rows = df.collect(); (rows.length.toLong, Some(rowsDigest(rows)))
+        case None => (df.count(), None)
+      }
       withClue(s"$name:") { assert(n > 0 || mayBeEmpty.contains(name)) }
+      got.filter(_ != frozenDigests(name)).map(g => s"$name -> $g")
     }
+    assert(drifted.isEmpty, drifted.mkString("row digests drifted:\n", "\n", ""))
   }
 
   test("flagship entry returns rows") {

@@ -66,4 +66,9 @@ class OutlinksSpec extends AnyFunSuite {
     assert(Outlinks.extract(Array.emptyByteArray).isEmpty)
     assert(Outlinks.extract("<a href=\"/b\">b</a>".getBytes("UTF-8")).map(_.href) == Seq("/b"))
   }
+
+  test("byte entry point sniffs the charset like Extractor.extract: cp1252 anchors keep their accents") {
+    val page = "<a href=\"/x\">Caf\u00E9</a>".getBytes("windows-1252") // lone 0xE9: not UTF-8
+    assert(Outlinks.extract(page) == Seq(Outlinks.Link("/x", "Caf\u00E9")))
+  }
 }
