@@ -11,7 +11,9 @@ package graft.extract
   *
   * Thread-confined by design: one document runs on one task thread, so
   * the deadline lives in a ThreadLocal and [[tick]] costs a ThreadLocal
-  * read + counter bump, checking the clock only every 1024 ticks.
+  * read + counter bump, checking the clock only every 1024 ticks; the
+  * per-token tokenizer loop reads the state once ([[current]]) and skips
+  * the ThreadLocal read.
   */
 object DocBudget {
 
@@ -21,30 +23,44 @@ object DocBudget {
     override def fillInStackTrace(): Throwable = this
   }
 
-  // slot 0: deadline nanos (Long.MaxValue = unlimited); slot 1: tick count
-  private val state = new ThreadLocal[Array[Long]] {
-    override def initialValue(): Array[Long] = Array(Long.MaxValue, 0L)
+  /** One thread's budget state. A loop that ticks per token reads it
+    * once per call ([[current]]) and ticks on it: the ThreadLocal lookup
+    * is the costly part of a tick on executor threads, whose maps hold
+    * many entries. Same object, so the tick count and clock checks are
+    * the same as through [[DocBudget.tick]]. */
+  final class State private[DocBudget] () {
+    private[DocBudget] var deadline = Long.MaxValue // Long.MaxValue = unlimited
+    private[DocBudget] var ticks = 0L
+
+    /** Hot-loop checkpoint: a counter bump, and a clock read every 1024 ticks. */
+    def tick(): Unit = {
+      ticks += 1
+      if ((ticks & 0x3FFL) == 0L && deadline != Long.MaxValue && System.nanoTime() > deadline)
+        throw new Exhausted
+    }
   }
+
+  private val state = new ThreadLocal[State] {
+    override def initialValue(): State = new State
+  }
+
+  /** The current thread's budget state, for a loop that ticks many times. */
+  def current(): State = state.get()
 
   /** Arm the budget for the current document. `timeoutMillis` 0 disarms;
     * negative values expire immediately (test hook for deterministic
     * exhaustion regardless of host speed). */
   def begin(timeoutMillis: Long): Unit = {
-    val a = state.get()
-    a(0) = if (timeoutMillis == 0L) Long.MaxValue
-           else System.nanoTime() + timeoutMillis * 1000000L
-    a(1) = 0L
+    val s = state.get()
+    s.deadline = if (timeoutMillis == 0L) Long.MaxValue
+                 else System.nanoTime() + timeoutMillis * 1000000L
+    s.ticks = 0L
   }
 
   /** Disarm — MUST run (finally) when the document finishes, or a stale
     * expired deadline would poison unrelated work reusing the thread. */
-  def clear(): Unit = state.get()(0) = Long.MaxValue
+  def clear(): Unit = state.get().deadline = Long.MaxValue
 
-  /** Hot-loop checkpoint: cheap enough for per-token/per-node call sites. */
-  def tick(): Unit = {
-    val a = state.get()
-    a(1) += 1
-    if ((a(1) & 0x3FFL) == 0L && a(0) != Long.MaxValue && System.nanoTime() > a(0))
-      throw new Exhausted
-  }
+  /** Hot-loop checkpoint: cheap enough for per-node call sites. */
+  def tick(): Unit = state.get().tick()
 }

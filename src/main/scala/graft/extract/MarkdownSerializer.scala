@@ -39,6 +39,10 @@ object MarkdownSerializer {
     }
 
     def inl(is: Vector[Inline], spans: Boolean): String = {
+      if (is.length == 1) is.head match {
+        case ITxt(s) => return collapseWs(s) // a lone text run needs no builder
+        case _ =>
+      }
       val sb = new java.lang.StringBuilder(64)
       is.foreach {
         case ITxt(s) => sb.append(collapseWs(s))

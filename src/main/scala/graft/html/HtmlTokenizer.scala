@@ -39,11 +39,13 @@ object HtmlTokenizer {
     private var textStart = 0
     /** The name last read holds a char that lower-casing may change. */
     private var nameFolds = false
+    /** The document's budget, looked up once per call. */
+    private val budget = graft.extract.DocBudget.current()
 
     def run(): IndexedSeq[HToken] = {
       var i = 0
       while (i < n && out.length < maxTokens) {
-        graft.extract.DocBudget.tick() // per-token wall-clock checkpoint
+        budget.tick() // per-token wall-clock checkpoint
         val lt = html.indexOf('<', i)
         if (lt < 0) { flushText(n); i = n; textStart = n }
         else {

@@ -1,6 +1,11 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.example.data.simple.SimpleGroup
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
+import graft.core.PartitionMetrics
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 /** Iceberg-shaped table layer over partitioned Parquet (SURVEY §7.0: no
@@ -93,12 +98,37 @@ object TableIO {
     }
   }
 
-  /** Metrics get the same stage-then-rename atomicity as data: a killed
-    * write must never leave a half-dir that poisons readMetrics.
+  /** One batch's lineage rows, written as one Parquet file on the driver
+    * (no Spark job: a handful of rows needs no tasks) with the same
+    * stage-then-rename atomicity as data — a killed write must never
+    * leave a half-dir that poisons readMetrics. The Parquet schema is
+    * Spark's own conversion of PartitionMetrics' encoder schema, so the
+    * case class stays the one schema source and Spark reads the table
+    * back as it would had it written it. Int and Long fields need no
+    * writer change; a field of any other type fails here, by name, and
+    * fails ExtractJobSpec's field-type check before it ships.
     */
-  def appendMetrics(df: DataFrame, root: String, batchId: String): Unit = {
+  def appendMetrics(spark: SparkSession, rows: Seq[PartitionMetrics], root: String,
+                    batchId: String): Unit = {
     val staging = s"$root/.staging/metrics-$batchId"
-    df.write.mode("overwrite").parquet(staging)
+    val parquetSchema = new SparkToParquetSchemaConverter(spark.sessionState.conf)
+      .convert(Encoders.product[PartitionMetrics].schema)
+    val writer = ExampleParquetWriter
+      .builder(new HPath(s"$staging/part-00000-$batchId.parquet"))
+      .withConf(spark.sessionState.newHadoopConf())
+      .withType(parquetSchema)
+      .build()
+    try rows.foreach { m =>
+      val g = new SimpleGroup(parquetSchema)
+      m.productIterator.zipWithIndex.foreach {
+        case (v: Int, i) => g.add(i, v)
+        case (v: Long, i) => g.add(i, v)
+        case (v, i) => throw new IllegalArgumentException(
+          s"appendMetrics writes Int and Long fields only: PartitionMetrics.${m.productElementName(i)} " +
+          s"is ${v.getClass.getName}")
+      }
+      writer.write(g)
+    } finally writer.close()
     val to = Paths.get(s"${metricsPath(root)}/batch=$batchId")
     Files.createDirectories(to.getParent)
     Files.move(Paths.get(staging), to, StandardCopyOption.ATOMIC_MOVE)

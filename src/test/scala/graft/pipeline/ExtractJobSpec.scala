@@ -3,16 +3,19 @@ package graft.pipeline
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.SpanSugar._
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.SparkTestSession
-import graft.core.ExtractedDoc
+import graft.core.{ExtractedDoc, PartitionMetrics}
 import graft.extract.Extractor
 import graft.gen.SyntheticCorpus
 import graft.io.TableIO
@@ -216,5 +219,67 @@ class ExtractJobSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val m = TableIO.readMetrics(spark, out).get.select(metricsCols.map(col): _*).collect()
     assert(m.toSet == groupedLineage(data).collect().toSet)
     assert(m.length == 1, "one scan split, one partition row")
+  }
+
+  test("a fresh run is one Spark job: the lineage rows are written without one") {
+    val pages = tmp(); val out = tmp()
+    SyntheticCorpus.generate(spark, 120).write.mode("overwrite").parquet(pages)
+    val sc = spark.sparkContext
+    val group = s"extract-one-job-${System.nanoTime()}"
+    sc.setJobGroup(group, "one fresh ExtractJob run")
+    try assert(ExtractJob.run(spark, pages, out).extracted == 120)
+    finally sc.clearJobGroup()
+    // the status tracker learns of jobs through the listener bus, in
+    // order: once a later marker job shows, every job of the run has
+    val marker = s"$group-marker"
+    sc.setJobGroup(marker, "listener-bus marker")
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    eventually(timeout(30.seconds), interval(50.millis)) {
+      assert(sc.statusTracker.getJobIdsForGroup(marker).nonEmpty)
+    }
+    val jobs = sc.statusTracker.getJobIdsForGroup(group)
+    assert(jobs.length == 1, s"jobs ${jobs.sorted.mkString(", ")}")
+    assert(TableIO.readMetrics(spark, out).get.agg(sum("urls_seen")).head.getLong(0) == 120)
+  }
+
+  test("write: no dictionary on url and markdown only; metrics keep PartitionMetrics' schema") {
+    val pages = tmp(); val out = tmp()
+    // every page three times under distinct urls: repeated text is where
+    // a dictionary pays, so markdown keeps one at the parent and span
+    // bodies must keep theirs
+    val once = SyntheticCorpus.generate(spark, 70).toDF()
+    (0 until 3).map(k => once.withColumn("url", concat(col("url"), lit(s"?copy=$k"))))
+      .reduce(_ union _).write.mode("overwrite").parquet(pages)
+    assert(ExtractJob.run(spark, pages, out).extracted == 210)
+    val conf = spark.sessionState.newHadoopConf()
+    val dataFiles = Files.walk(Paths.get(TableIO.dataPath(out))).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+    assert(dataFiles.nonEmpty)
+    // column path -> does any chunk of it carry a dictionary encoding
+    val dictionary = dataFiles.flatMap { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(f.toUri), conf))
+      try reader.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala.map(c =>
+        c.getPath.toDotString -> c.getEncodings.asScala.exists(_.usesDictionary)))
+      finally reader.close()
+    }.groupMapReduce(_._1)(_._2)(_ || _)
+    val plain = Seq("url", "markdown")
+    assert(plain.filterNot(dictionary.get(_).contains(false)).isEmpty,
+      plain.map(c => s"$c: dictionary ${dictionary.get(c)}").mkString("; "))
+    // no global switch, and repeated short text keeps its dictionary
+    for (c <- Seq("spans.list.element.kind", "spans.list.element.body"))
+      assert(dictionary.get(c).contains(true), s"$c: dictionary ${dictionary.get(c)}")
+
+    // appendMetrics writes Int and Long fields only
+    val fieldTypes = Encoders.product[PartitionMetrics].schema.fields
+    assert(fieldTypes.forall(f => f.dataType == IntegerType || f.dataType == LongType),
+      fieldTypes.mkString(", "))
+    val m = TableIO.readMetrics(spark, out).get
+    // Spark reads every file-table column as nullable
+    val nullable = Encoders.product[PartitionMetrics].schema.fields.map(_.copy(nullable = true))
+    assert(m.schema == StructType(nullable :+ StructField("batch", StringType)))
+    assert(m.agg(sum("urls_seen")).head.getLong(0) == 210)
+    val staged = Paths.get(s"$out/.staging")
+    assert(!Files.exists(staged) ||
+      !Files.list(staged).iterator().asScala.exists(_.getFileName.toString.startsWith("metrics-")))
   }
 }
