@@ -170,6 +170,17 @@ object Probe {
     true
   }
 
+  /** `plan` without what changes from run to run: expression ids
+    * (`doc_id#12L`), lambda variable counters (`lambda x_20`), exchange
+    * `plan_id`s and JVM identity suffixes (lambda class names,
+    * `@1b6dab22`). */
+  private[bench] def normalised(plan: String): String =
+    plan.replaceAll("#\\d+L?", "")
+      .replaceAll("(lambda \\w+?)_\\d+\\b", "$1")
+      .replaceAll(", \\[plan_id=\\d+\\]", "")
+      .replaceAll("\\$\\$Lambda[^ ,)\\]]*", "\\$\\$Lambda")
+      .replaceAll("(?<=[\\w$])@[0-9a-f]{1,8}\\b", "")
+
   /** Renders the plans of representative queries, each with the reason
     * its shape is the designed one, to BENCH/PLANS.md: predicate pushdown
     * reaching the parquet scan, column pruning, broadcast placement,
@@ -188,9 +199,9 @@ object Probe {
       "q31_embed_neardup" -> "cell-blocked self-join on ceil(sqrt(n)) coarse cells (no label hot-block)",
       "q32_ivf_search" -> "probe-3 IVF cells; assignment subplan persisted and reused (InMemoryTableScan)",
       "q34_template_scrub" -> "posexplode lines map-only; (host,line) shuffle aggregates; LeftAnti scrub-back",
-      "q39_ann_recall" -> "distance transform hoisted out of the fold (one sqDist per centroid); persisted assignment shared by the IVF and exact branches",
+      "q39_ann_recall" -> "typed-map assignment against the driver-side codebook (scalaTopK, no interpreted fold); persisted assignment shared by the IVF and exact branches",
       "q40_trained_recall" -> "Lloyd-trained spherical codebook; same probe-3 assignment plan as q39",
-      "q41_twolevel_assign" -> "two-level quantizer: super-cell routing joins, WindowGroupLimit top-3 over probed cells only",
+      "q41_twolevel_assign" -> "two-level quantizer: one persisted typed-map routing against the driver-side super-codebook feeds both the centroid grouping and the probe explode; the join on super-cell scores pairs with sqdist6; WindowGroupLimit top-3 over probed cells only",
       "q42_band_claims" -> "simhash bands via one posexplode; first-claim via window min; no embedding-width rows in the shuffle",
       "q35_meteor" -> "one typed alignment map; only the final orderBy exchange",
       "q36_pt2px" -> "pure projection; scan prunes to doc_id",
@@ -224,7 +235,7 @@ object Probe {
     interesting.foreach { case (name, why) =>
       val df = graft.SparkEntry.queries(name)(spark, sfDir)
       sb.append(s"\n## $name\n\n$why\n\n```\n")
-      val plan = df.queryExecution.explainString(SimpleMode)
+      val plan = normalised(df.queryExecution.explainString(SimpleMode))
       // the load-bearing shape is in the first levels; an unrolled
       // iterative lineage (q40's Lloyd chain) would be ~600 KB of noise
       val lines = plan.linesIterator.toVector

@@ -410,27 +410,4 @@ object TexNormalizer {
     }
     sb.toString.replaceAll(" {2,}", " ").trim
   }
-
-  /** LaTeX special-char escaping for prose embedded in tabular cells —
-    * `latex_escape` analog (markdown.py:18-36).
-    */
-  def latexEscape(s: String): String = {
-    val sb = new java.lang.StringBuilder(s.length + 8)
-    s.foreach {
-      case '&' => sb.append("\\&")
-      case '%' => sb.append("\\%")
-      case '$' => sb.append("\\$")
-      case '#' => sb.append("\\#")
-      case '_' => sb.append("\\_")
-      case '{' => sb.append("\\{")
-      case '}' => sb.append("\\}")
-      case '~' => sb.append("\\textasciitilde ")
-      case '^' => sb.append("\\textasciicircum ")
-      case '\\' => sb.append("\\textbackslash ")
-      case '<' => sb.append("\\textless ")
-      case '>' => sb.append("\\textgreater ")
-      case c => sb.append(c)
-    }
-    sb.toString
-  }
 }

@@ -80,10 +80,39 @@ case class Cos6(a: Expression, b: Expression, an: Expression, bn: Expression)
       newAn: Expression, newBn: Expression): Cos6 = copy(newA, newB, newAn, newBn)
 }
 
+/** round6(Σ (aᵢ − bᵢ)²): the squared L2 distance of two double vectors
+  * as the DuckDB oracles compute it — the sum folded left to right over
+  * `a`'s length, rounded HALF_UP to 6 decimals like [[Cos6]]. An
+  * `array<float>` argument is widened by an implicit cast, which is
+  * exact. Reads the arrays in place; CodegenFallback for the same
+  * reason as [[Cos6]].
+  */
+case class SqDist6(a: Expression, b: Expression)
+    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
+  override def left: Expression = a
+  override def right: Expression = b
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType), ArrayType(DoubleType))
+  override def dataType: DataType = DoubleType
+  override def nullSafeEval(x: Any, y: Any): Any = {
+    val u = x.asInstanceOf[ArrayData]
+    val v = y.asInstanceOf[ArrayData]
+    var s = 0.0
+    var i = 0
+    while (i < u.numElements()) { val d = u.getDouble(i) - v.getDouble(i); s += d * d; i += 1 }
+    java.math.BigDecimal.valueOf(s).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+  }
+  override protected def withNewChildrenInternal(newA: Expression, newB: Expression): SqDist6 =
+    copy(newA, newB)
+}
+
 object GraftFunctions {
   /** [[Cos6]] as a Column: `cos6(a, b, ‖a‖, ‖b‖)`. */
   def cos6(a: Column, b: Column, an: Column, bn: Column): Column =
     ExpressionColumn(Cos6(expression(a), expression(b), expression(an), expression(bn)))
+
+  /** [[SqDist6]] as a Column: `sqDist6(a, b)`. */
+  def sqDist6(a: Column, b: Column): Column =
+    ExpressionColumn(SqDist6(expression(a), expression(b)))
 
   private def unary(name: String, mk: Expression => Expression)(exprs: Seq[Expression]): Expression = {
     if (exprs.length != 1)

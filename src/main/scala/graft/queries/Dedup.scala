@@ -34,7 +34,7 @@ object Dedup {
     * would silently emit duplicate rows on a collision.
     */
   private val dupShift = 10000000L
-  private def dupCorpus(s: SparkSession, dir: String): DataFrame = {
+  private[queries] def dupCorpus(s: SparkSession, dir: String): DataFrame = {
     val d = s.read.parquet(s"$dir/documents.parquet").select("doc_id", "text")
     d.unionAll(d.select((col("doc_id") + dupShift).as("doc_id"), col("text")))
   }
@@ -95,6 +95,35 @@ object Dedup {
       s"list_min(list_transform($sh, h -> ($a * h + $b) % $P)) AS mh$k"
     }.mkString(",\n             ")
 
+  /** The oracle chain t → s → sig → bands over `src` (doc_id, text):
+    * the SQL twin of bandsDf(sigDf(...)), shared by q20, q22 and q38. */
+  private def bandsSql(src: String): String =
+    s"""t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS tk FROM $src),
+      s AS (SELECT doc_id, ${shinglesSql("tk")} AS sh FROM t WHERE len(tk) >= 3),
+      sig AS (SELECT doc_id,
+             ${minhashSqlCols("sh")}
+      FROM s WHERE len(sh) > 0),
+      bands AS (
+        SELECT 0 AS band, mh0 * $P + mh1 AS bkey, doc_id FROM sig UNION ALL
+        SELECT 1, mh2 * $P + mh3, doc_id FROM sig UNION ALL
+        SELECT 2, mh4 * $P + mh5, doc_id FROM sig UNION ALL
+        SELECT 3, mh6 * $P + mh7, doc_id FROM sig)"""
+
+  /** LSH candidate pairs: documents sharing a (band, bkey) bucket. */
+  private val candSql: String =
+    """cand AS (SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
+               FROM bands a JOIN bands b
+                 ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id)"""
+
+  /** Per candidate pair, the token-set intersection and set sizes
+    * against `tt` (doc_id, distinct tokens): the SQL twin of
+    * pairsWithJaccard's verify step, shared by q22 and q38. */
+  private val jaccardSql: String =
+    """p AS (SELECT id1, id2,
+                   len(list_filter(t1.tk, x -> list_contains(t2.tk, x))) AS inter,
+                   len(t1.tk) AS n1, len(t2.tk) AS n2
+            FROM cand JOIN tt t1 ON id1 = t1.doc_id JOIN tt t2 ON id2 = t2.doc_id)"""
+
   private def sigDf(s: SparkSession, base: DataFrame): DataFrame = {
     import s.implicits._
     // fanOut: documents is a one-split scan (dupCorpus two), so the
@@ -146,16 +175,7 @@ object Dedup {
     },
     Some(s"""
       WITH dup AS ($dupCorpusSql),
-      t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS tk FROM dup),
-      s AS (SELECT doc_id, ${shinglesSql("tk")} AS sh FROM t WHERE len(tk) >= 3),
-      sig AS (SELECT doc_id,
-             ${minhashSqlCols("sh")}
-      FROM s WHERE len(sh) > 0),
-      bands AS (
-        SELECT 0 AS band, mh0 * $P + mh1 AS bkey, doc_id FROM sig UNION ALL
-        SELECT 1, mh2 * $P + mh3, doc_id FROM sig UNION ALL
-        SELECT 2, mh4 * $P + mh5, doc_id FROM sig UNION ALL
-        SELECT 3, mh6 * $P + mh7, doc_id FROM sig)
+      ${bandsSql("dup")}
       SELECT band, bkey, count(*) AS n_docs, min(doc_id) AS min_doc, max(doc_id) AS max_doc
       FROM bands GROUP BY band, bkey HAVING count(*) > 1 ORDER BY band, bkey
     """.trim)
@@ -325,25 +345,11 @@ object Dedup {
       pairsWithJaccard(s, s.read.parquet(s"$dir/documents.parquet"))
         .orderBy("id1", "id2"),
     Some(s"""
-      WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS tk FROM documents),
-      s AS (SELECT doc_id, ${shinglesSql("tk")} AS sh FROM t WHERE len(tk) >= 3),
-      sig AS (SELECT doc_id,
-             ${minhashSqlCols("sh")}
-      FROM s WHERE len(sh) > 0),
-      bands AS (
-        SELECT 0 AS band, mh0 * $P + mh1 AS bkey, doc_id FROM sig UNION ALL
-        SELECT 1, mh2 * $P + mh3, doc_id FROM sig UNION ALL
-        SELECT 2, mh4 * $P + mh5, doc_id FROM sig UNION ALL
-        SELECT 3, mh6 * $P + mh7, doc_id FROM sig),
-      cand AS (SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-               FROM bands a JOIN bands b
-                 ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
+      WITH ${bandsSql("documents")},
+      $candSql,
       tt AS (SELECT doc_id, list_distinct(regexp_split_to_array(trim(text), '\\s+')) AS tk
              FROM documents),
-      p AS (SELECT id1, id2,
-                   len(list_filter(t1.tk, x -> list_contains(t2.tk, x))) AS inter,
-                   len(t1.tk) AS n1, len(t2.tk) AS n2
-            FROM cand JOIN tt t1 ON id1 = t1.doc_id JOIN tt t2 ON id2 = t2.doc_id)
+      $jaccardSql
       SELECT id1, id2, CAST(inter AS INT) AS inter, CAST(n1 + n2 - inter AS INT) AS uni,
              CAST((1000 * inter) // (n1 + n2 - inter) AS BIGINT) AS jmilli
       FROM p ORDER BY id1, id2
@@ -446,24 +452,10 @@ object Dedup {
     },
     Some(s"""
       WITH RECURSIVE dup AS ($dupCorpusSql),
-      t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS tk FROM dup),
-      s AS (SELECT doc_id, ${shinglesSql("tk")} AS sh FROM t WHERE len(tk) >= 3),
-      sig AS (SELECT doc_id,
-             ${minhashSqlCols("sh")}
-      FROM s WHERE len(sh) > 0),
-      bands AS (
-        SELECT 0 AS band, mh0 * $P + mh1 AS bkey, doc_id FROM sig UNION ALL
-        SELECT 1, mh2 * $P + mh3, doc_id FROM sig UNION ALL
-        SELECT 2, mh4 * $P + mh5, doc_id FROM sig UNION ALL
-        SELECT 3, mh6 * $P + mh7, doc_id FROM sig),
-      cand AS (SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-               FROM bands a JOIN bands b
-                 ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
+      ${bandsSql("dup")},
+      $candSql,
       tt AS (SELECT doc_id, list_distinct(regexp_split_to_array(trim(text), '\\s+')) AS tk FROM dup),
-      p AS (SELECT id1, id2,
-                   len(list_filter(t1.tk, x -> list_contains(t2.tk, x))) AS inter,
-                   len(t1.tk) AS n1, len(t2.tk) AS n2
-            FROM cand JOIN tt t1 ON id1 = t1.doc_id JOIN tt t2 ON id2 = t2.doc_id),
+      $jaccardSql,
       pairs AS (SELECT id1, id2 FROM p WHERE (1000 * inter) // (n1 + n2 - inter) >= 800),
       sym AS (SELECT id1 AS src, id2 AS dst FROM pairs
               UNION ALL SELECT id2, id1 FROM pairs),
@@ -584,6 +576,36 @@ object Dedup {
     }
   }
 
+  /** The oracle chain t → fl → pos → sh over documents: every SubK-token
+    * window hash h, as (`shCols`, h) rows — the windowwise form that
+    * [[windowHashesScala]] is property-tested against, shared by q52,
+    * q57 and q62. */
+  private def windowHashSql(shCols: String): String =
+    s"""t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
+                 FROM documents),
+      fl AS (SELECT doc_id,
+                    list_transform(toks, w -> (length(w) * 31 + ascii(substring(w, 1, 1))) % $SubP1) AS fs1,
+                    list_transform(toks, w -> (length(w) * 31 + ascii(substring(w, 1, 1))) % $SubP2) AS fs2,
+                    len(toks) AS n
+             FROM t),
+      pos AS (SELECT doc_id, fs1, fs2, unnest(generate_series(1, n - ${SubK - 1})) AS i
+              FROM fl WHERE n >= $SubK),
+      sh AS (SELECT $shCols,
+                    list_reduce(fs1[i : i + ${SubK - 1}], (a, b) -> (a * $SubB1 + b) % $SubP1) * 2147483648
+                    + list_reduce(fs2[i : i + ${SubK - 1}], (a, b) -> (a * $SubB2 + b) % $SubP2) AS h
+             FROM pos)"""
+
+  /** (doc_id, h): one row per SubK-token window of each document. */
+  private def windowHashRows(docs: DataFrame): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs.select(col("doc_id"), col("text")).as[(Long, String)]
+      .mapPartitions(_.flatMap { case (id, text) =>
+        windowHashesScala(text).iterator.map(h => (id, h))
+      })
+      .toDF("doc_id", "h")
+  }
+
   /** Duplicated-SUBSTRING detection — the training-data dedup family
     * document-level near-dup (MinHash/SimHash) cannot see: two mostly
     * different documents sharing one verbatim boilerplate passage
@@ -615,14 +637,8 @@ object Dedup {
   val q52DupSubstrings = QueryDef(
     "q52_dup_substrings",
     (s, dir) => {
-      import s.implicits._
       val docs = s.read.parquet(s"$dir/documents.parquet")
-      val shingles = docs
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .mapPartitions(_.flatMap { case (id, text) =>
-          windowHashesScala(text).iterator.map(h => (id, h))
-        })
-        .toDF("doc_id", "h")
+      val shingles = windowHashRows(docs)
       // single-lineage shape: compact to one row per (h, doc) with its
       // instance count (map-side combine soaks up self-repeats), then a
       // count window over h gives each row the number of DISTINCT docs
@@ -645,19 +661,7 @@ object Dedup {
         .orderBy("doc_id")
     },
     Some(s"""
-      WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-                 FROM documents),
-      fl AS (SELECT doc_id,
-                    list_transform(toks, w -> (length(w) * 31 + ascii(substring(w, 1, 1))) % $SubP1) AS fs1,
-                    list_transform(toks, w -> (length(w) * 31 + ascii(substring(w, 1, 1))) % $SubP2) AS fs2,
-                    len(toks) AS n
-             FROM t),
-      pos AS (SELECT doc_id, fs1, fs2, unnest(generate_series(1, n - ${SubK - 1})) AS i
-              FROM fl WHERE n >= $SubK),
-      sh AS (SELECT doc_id,
-                    list_reduce(fs1[i : i + ${SubK - 1}], (a, b) -> (a * $SubB1 + b) % $SubP1) * 2147483648
-                    + list_reduce(fs2[i : i + ${SubK - 1}], (a, b) -> (a * $SubB2 + b) % $SubP2) AS h
-             FROM pos),
+      WITH ${windowHashSql("doc_id")},
       gd AS (SELECT h, count(DISTINCT doc_id) AS nd FROM sh GROUP BY h),
       pd AS (SELECT sh.doc_id,
                     count(*) AS n_windows,
@@ -699,18 +703,11 @@ object Dedup {
   val q57Decontam = QueryDef(
     "q57_decontam",
     (s, dir) => {
-      import s.implicits._
-      def grams(df: org.apache.spark.sql.DataFrame) =
-        df.select(col("doc_id"), col("text")).as[(Long, String)]
-          .mapPartitions(_.flatMap { case (id, text) =>
-            windowHashesScala(text).iterator.map(h => (id, h))
-          })
-          .toDF("doc_id", "h")
       val docs = s.read.parquet(s"$dir/documents.parquet")
-      val benchHashes = grams(docs.filter(col("doc_id") % 17 === 0))
+      val benchHashes = windowHashRows(docs.filter(col("doc_id") % 17 === 0))
         .select("h").distinct().withColumn("hit", lit(1L))
       val train = docs.filter(col("doc_id") % 17 =!= 0)
-      val perDoc = grams(train)
+      val perDoc = windowHashRows(train)
         .join(broadcast(benchHashes), Seq("h"), "left")
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_windows"),
@@ -723,19 +720,7 @@ object Dedup {
         .orderBy("doc_id")
     },
     Some(s"""
-      WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-                 FROM documents),
-      fl AS (SELECT doc_id,
-                    list_transform(toks, w -> (length(w) * 31 + ascii(substring(w, 1, 1))) % $SubP1) AS fs1,
-                    list_transform(toks, w -> (length(w) * 31 + ascii(substring(w, 1, 1))) % $SubP2) AS fs2,
-                    len(toks) AS n
-             FROM t),
-      pos AS (SELECT doc_id, fs1, fs2, unnest(generate_series(1, n - ${SubK - 1})) AS i
-              FROM fl WHERE n >= $SubK),
-      sh AS (SELECT doc_id,
-                    list_reduce(fs1[i : i + ${SubK - 1}], (a, b) -> (a * $SubB1 + b) % $SubP1) * 2147483648
-                    + list_reduce(fs2[i : i + ${SubK - 1}], (a, b) -> (a * $SubB2 + b) % $SubP2) AS h
-             FROM pos),
+      WITH ${windowHashSql("doc_id")},
       bg AS (SELECT DISTINCT h FROM sh WHERE doc_id % 17 = 0),
       pd AS (SELECT s2.doc_id,
                     count(*) AS n_windows,
@@ -767,12 +752,7 @@ object Dedup {
     (s, dir) => {
       import s.implicits._
       val docs = s.read.parquet(s"$dir/documents.parquet")
-      val benchHashes = docs.filter(col("doc_id") % 17 === 0)
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .mapPartitions(_.flatMap { case (_, text) =>
-          windowHashesScala(text).iterator
-        })
-        .toDF("h").distinct()
+      val benchHashes = windowHashRows(docs.filter(col("doc_id") % 17 === 0)).select("h").distinct()
       val trainHits = docs.filter(col("doc_id") % 17 =!= 0)
         .select(col("doc_id"), col("text")).as[(Long, String)]
         .mapPartitions(_.flatMap { case (id, text) =>
@@ -787,19 +767,7 @@ object Dedup {
         .orderBy("doc_id", "tok_start")
     },
     Some(s"""
-      WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-                 FROM documents),
-      fl AS (SELECT doc_id,
-                    list_transform(toks, w -> (length(w) * 31 + ascii(substring(w, 1, 1))) % $SubP1) AS fs1,
-                    list_transform(toks, w -> (length(w) * 31 + ascii(substring(w, 1, 1))) % $SubP2) AS fs2,
-                    len(toks) AS n
-             FROM t),
-      pos AS (SELECT doc_id, fs1, fs2, unnest(generate_series(1, n - ${SubK - 1})) AS i
-              FROM fl WHERE n >= $SubK),
-      sh AS (SELECT doc_id, i,
-                    list_reduce(fs1[i : i + ${SubK - 1}], (a, b) -> (a * $SubB1 + b) % $SubP1) * 2147483648
-                    + list_reduce(fs2[i : i + ${SubK - 1}], (a, b) -> (a * $SubB2 + b) % $SubP2) AS h
-             FROM pos),
+      WITH ${windowHashSql("doc_id, i")},
       bg AS (SELECT DISTINCT h FROM sh WHERE doc_id % 17 = 0)
       SELECT s2.doc_id, CAST(s2.i - 1 AS BIGINT) AS tok_start
       FROM sh s2 SEMI JOIN bg ON s2.h = bg.h

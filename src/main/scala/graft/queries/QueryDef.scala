@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
 
 /** One engine capability exposed through the driver contract: a Spark
   * query over the test tables plus (when SQL-expressible) an equivalent
@@ -14,15 +15,6 @@ final case class QueryDef(
 )
 
 object QueryDef {
-  /** Register parquet dirs as temp views named like the bare tables, so
-    * query bodies can be written once against table names. DuckDB gets
-    * equivalent views from read_parquet (see Verify/driver).
-    */
-  def loadTables(spark: SparkSession, dir: String, tables: Seq[String]): Unit =
-    tables.foreach { t =>
-      spark.read.parquet(s"$dir/$t.parquet").createOrReplaceTempView(t)
-    }
-
   /** Spread a SMALL scan across the session's cores before heavy
     * per-row CPU work (extraction, alignment, signature hashing, the
     * external-process pipe). A table that fits one parquet split
@@ -44,7 +36,14 @@ object QueryDef {
     */
   def fanOut(df: DataFrame, key: String): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= target) df
+    if (scanPartitions(df) >= target) df
     else df.repartition(target, org.apache.spark.sql.functions.col(key))
   }
+
+  /** Read splits of `df`'s planned file scans, summed over a Union's
+    * branches: for a scan that is filtered, projected or unioned, the
+    * partition count `df.rdd` would report. Planning only — no SQL
+    * execution runs, and the query that consumes `df` plans it afresh. */
+  private[queries] def scanPartitions(df: DataFrame): Int =
+    df.queryExecution.executedPlan.collect { case s: FileSourceScanExec => s.inputRDD.getNumPartitions }.sum
 }

@@ -1,17 +1,19 @@
 package graft.queries
 
-import graft.functions.GraftFunctions.cos6
+import graft.functions.GraftFunctions.{cos6, sqDist6}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 /** Similarity search over the embeddings table: brute-force cosine top-k
   * (the exactness baseline) and the IVF building blocks (centroids +
-  * nearest-centroid assignment) as the scale path. Dot products are
-  * ordered left-folds (`zip_with` + `aggregate`, or the same fold inside
-  * the [[graft.functions.Cos6]] expression that scores every cosine
-  * pair), ranking keys are rounded, and distances go through exact
-  * decimals — so the DuckDB oracle matches bit-for-bit.
+  * nearest-centroid assignment) as the scale path. Dot products and
+  * squared distances are ordered left-folds (`zip_with` + `aggregate`,
+  * or the same fold inside the [[graft.functions.Cos6]] and
+  * [[graft.functions.SqDist6]] expressions that score every pair, or
+  * [[scalaTopK]] against a driver-side codebook), ranking keys are
+  * rounded, and sums go through exact decimals — so the DuckDB oracle
+  * matches bit-for-bit.
   *
   * Scale notes: the query side of top-k is broadcast (small), candidates
   * stream map-only into a per-query top-k window; IVF assignment is a
@@ -52,56 +54,13 @@ object Similarity {
   /** Every (query, candidate) pair an assignment's probe lists reach,
     * scored: (qid, qhome, nid, ppos, cos6), ppos = the probed cell's
     * position in the query's probe list. */
-  private def probedPairs(assigned: DataFrame): DataFrame =
+  private[queries] def probedPairs(assigned: DataFrame): DataFrame =
     assigned.filter(sampled)
       .select(col("vec_id").as("qid"), col("home").as("qhome"),
         posexplode(col("probes")).as(Seq("ppos", "pcell")),
         col("embedding").as("qe"), col("nrm").as("qn"))
       .join(candRows(assigned), col("pcell") === col("ncell") && col("qid") =!= col("nid"))
       .select(col("qid"), col("qhome"), col("nid"), col("ppos"), pairCos6)
-
-  private def sqDist(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b,
-        (x, y) => (x.cast("double") - y.cast("double")) * (x.cast("double") - y.cast("double"))),
-      lit(0.0), (acc, v) => acc + v)
-
-  /** Top-3 nearest cells per row: the centroid array is first mapped ONCE
-    * into small (d, cid) structs — one sqDist evaluation per centroid —
-    * then an ordered fold over those scalar pairs keeps the running
-    * top-3. (Folding over raw centroids re-embedded the whole sqDist
-    * aggregate into every `when` branch — higher-order functions are
-    * interpreted, so that cost ~6× the arithmetic; measured as the q39
-    * 60 s regression in round 2.) Distances rounded to 6 decimals, ties
-    * broken by ascending cid (the fold visits cids in ascending order and
-    * replaces only on strict improvement) — bit-identical to a
-    * (d26 ASC, cid ASC) window rank. Probe count 3 is evidence-driven:
-    * ~3√n candidates per query against the ⌈√n⌉-cell quantizer.
-    */
-  private def top3Cells(emb: Column, cents: Column): Column = {
-    val dists = transform(cents, c =>
-      struct(round(sqDist(emb, c.getField("ce")), 6).as("d"), c.getField("cid").as("cid")))
-    val z = struct(
-      lit(Double.MaxValue).as("d1"), lit(Long.MaxValue).as("c1"),
-      lit(Double.MaxValue).as("d2"), lit(Long.MaxValue).as("c2"),
-      lit(Double.MaxValue).as("d3"), lit(Long.MaxValue).as("c3"))
-    aggregate(dists, z, (acc, c) => {
-      val dd = c.getField("d")
-      val cid = c.getField("cid")
-      when(dd < acc.getField("d1"),
-        struct(dd.as("d1"), cid.as("c1"),
-               acc.getField("d1").as("d2"), acc.getField("c1").as("c2"),
-               acc.getField("d2").as("d3"), acc.getField("c2").as("c3")))
-        .when(dd < acc.getField("d2"),
-          struct(acc.getField("d1").as("d1"), acc.getField("c1").as("c1"),
-                 dd.as("d2"), cid.as("c2"),
-                 acc.getField("d2").as("d3"), acc.getField("c2").as("c3")))
-        .when(dd < acc.getField("d3"),
-          struct(acc.getField("d1").as("d1"), acc.getField("c1").as("c1"),
-                 acc.getField("d2").as("d2"), acc.getField("c2").as("c2"),
-                 dd.as("d3"), cid.as("c3")))
-        .otherwise(acc)
-    })
-  }
 
   /** Above this many cells the one-row packed codebook stops being
     * broadcast-safe (4096 cells × 1024-dim doubles ≈ 32 MB; ⌈√n⌉ at
@@ -148,8 +107,7 @@ object Similarity {
       : DataFrame = {
     val cTable = centroidTable(e, k)
     val d = e.crossJoin(broadcast(cTable))
-      .select(col("vec_id").as("vid"), col("cid"),
-        round(sqDist(col("embedding"), col("ce")), 6).as("d26"))
+      .select(col("vec_id").as("vid"), col("cid"), sqDist6(col("embedding"), col("ce")).as("d26"))
     top3FromPairs(e, d)
   }
 
@@ -167,8 +125,8 @@ object Similarity {
       .groupBy("vid")
       .agg(min(when(col("rk") === 1, col("cid"))).as("home"),
         array_sort(collect_list(struct(col("rk"), col("cid")))).as("rkc"))
-    // pad probes to exactly 3 with the same Long.MaxValue sentinels the
-    // fold paths emit, so the contract holds even when a vector saw
+    // pad probes to exactly 3 with the same Long.MaxValue sentinels
+    // scalaTopK emits, so the contract holds even when a vector saw
     // fewer than 3 candidates (k < 3 codebooks, sparse probed cells)
     val probes0 = transform(col("rkc"), x => x.getField("cid"))
     e.join(top, e("vec_id") === top("vid"))
@@ -193,54 +151,28 @@ object Similarity {
   private[queries] def assignedTwoLevel(e: DataFrame, k: Long)
       : DataFrame = {
     val k2 = math.ceil(math.sqrt(k.toDouble)).toLong
-    val cTable = centroidTable(e, k)
-    val superRow = broadcast(cTable.filter(col("cid") < k2)
-      .agg(array_sort(collect_list(struct(col("cid"), col("ce")))).as("cents")))
-    // level 1a: every centroid hangs under its single nearest super-cell
-    val grouped = cTable.crossJoin(superRow)
-      .select(col("cid"), col("ce"), top3Cells(col("ce"), col("cents")).getField("c1").as("scid"))
-    // level 1b: every vector probes its top-3 super-cells (persist barrier
-    // before the field extraction — the CollapseProject rule); fanOut
-    // spreads the one-split scan under the interpreted routing fold
-    val spark = e.sparkSession
-    import spark.implicits._
-    val routed = QueryDef.fanOut(e.select(col("vec_id"), col("embedding")), "vec_id")
-      .crossJoin(superRow)
-      .select(col("vec_id"), col("embedding"),
-        top3Cells(col("embedding"), col("cents")).as("sbest"))
-      .persist()
-      .select(col("vec_id"), col("embedding"),
-        explode(array(col("sbest").getField("c1"), col("sbest").getField("c2"),
-          col("sbest").getField("c3"))).as("scid"))
+    // level 1: every vector's top-3 super-cells against the driver-side
+    // super-codebook. A centroid is the vector it was sampled from, so
+    // its home is its single nearest super-cell.
+    val routed = assignScala(e, collectCents(centroidTable(e, k).filter(col("cid") < k2)))
+    val grouped = routed.filter(col("vec_id") < k)
+      .select(col("home").as("scid"), col("vec_id").as("cid"), col("embedding").as("ce"))
     // level 2: exact argmin over the probed super-cells' centroids only.
     // No broadcast hint: past the broadcast regime this is a shuffle join
     // on scid (√k distinct keys, ~√k centroids + ~3n/√k vectors per key —
-    // no skew collapse); below it AQE broadcasts on its own. The
-    // distance itself runs as a compiled loop (the interpreted sqDist
-    // fold over the O(n·√k) pair stream was q41's hot spot) — same
-    // float→double widening, fold order and HALF_UP round as the
-    // Column form (the SimilaritySpec exhaustive-probe equality pins it
-    // against the flat path's Column distances).
-    val d = routed.join(grouped, Seq("scid"))
-      .select(col("vec_id"), col("cid"), col("embedding"), col("ce"))
-      .as[(Long, Long, Array[Float], Array[Double])]
-      .mapPartitions(_.map { case (vid, cid, emb, ce) =>
-        var ss = 0.0
-        var i = 0
-        while (i < emb.length) { val d0 = emb(i).toDouble - ce(i); ss += d0 * d0; i += 1 }
-        (vid, cid, round6(ss))
-      })
-      .toDF("vid", "cid", "d26")
+    // no skew collapse); below it AQE broadcasts on its own.
+    val d = routed.select(col("vec_id"), col("embedding"), explode(col("probes")).as("scid"))
+      .join(grouped, Seq("scid"))
+      .select(col("vec_id").as("vid"), col("cid"), sqDist6(col("embedding"), col("ce")).as("d26"))
     top3FromPairs(e, d)
   }
 
   // ---- typed-map broadcast assignment -------------------------------------
-  // Higher-order Column functions are interpreted (no codegen, no CSE);
-  // for the hot O(n·k·dim) assignment a plain Scala loop is ~10× cheaper
-  // at the table path's arithmetic: same elementwise float→double
+  // Against a driver-side codebook the nearest-k search is a plain Scala
+  // loop with the SqDist6 arithmetic: same elementwise float→double
   // widening, same left-to-right fold, same HALF_UP 6-decimal rounding
   // (the exact BigDecimal path Spark's Round takes on doubles), same
-  // (d26, cid) order. SimilaritySpec asserts the two paths agree
+  // (d26, cid) order. SimilaritySpec asserts the table path agrees
   // bit-for-bit; the DuckDB oracle gate re-proves it per round.
 
   private def round6(x: Double): Double =
@@ -256,10 +188,10 @@ object Similarity {
     math.sqrt(s)
   }
 
-  /** Top-k cells by round6(squared L2), ties on ascending cid (cents
-    * MUST arrive cid-ascending; strict-< insertion keeps the earlier =
-    * lower cid ahead on ties, the [[top3Cells]] fold's rule generalized);
-    * absent slots stay Long.MaxValue like the fold. */
+  /** Top-k cells by round6(squared L2) — the one nearest-k kernel —
+    * ties on ascending cid (cents MUST arrive cid-ascending; strict-<
+    * insertion keeps the earlier = lower cid ahead on ties, the (d26 asc,
+    * cid asc) window rank's rule); absent slots stay Long.MaxValue. */
   private def scalaTopK(v: Array[Double], cents: Array[(Long, Array[Double])],
                         k: Int): Array[Long] = {
     val ds = Array.fill(k)(Double.MaxValue)
@@ -538,7 +470,7 @@ object Similarity {
     * across budgets. The (sampled) query side is broadcast against all
     * candidates: an eval-only pass over a query SAMPLE, not the
     * corpus × corpus join. */
-  private def exactTop5(assigned: DataFrame): DataFrame = {
+  private[queries] def exactTop5(assigned: DataFrame): DataFrame = {
     val qsE = assigned.filter(sampled)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nrm").as("qn"))
     val cands = assigned.select(col("vec_id").as("nid"), col("embedding").as("ne"), col("nrm").as("cn"))
@@ -630,7 +562,7 @@ object Similarity {
     * lambda would evaluate it once PER ELEMENT (interpreted HOFs have
     * no CSE) — O(dim²) per row.
     */
-  private def normRows(e: DataFrame): DataFrame = {
+  private[queries] def normRows(e: DataFrame): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
     // no fanOut (see assignScala): many small downstream jobs make
@@ -1094,7 +1026,7 @@ object Similarity {
     * training/encoding input (normalization itself has ONE definition;
     * this only slices). Rows fan out m-fold but carry dim/m doubles
     * each, so total bytes are unchanged. */
-  private def pqSubRows(norm: DataFrame): DataFrame = {
+  private[queries] def pqSubRows(norm: DataFrame): DataFrame = {
     val spark = norm.sparkSession
     import spark.implicits._
     norm.select(col("vec_id"), col("ne")).as[(Long, Array[Double])]
@@ -1150,7 +1082,7 @@ object Similarity {
   /** Trained per-sub codebooks: first-PqKs subvectors as init, then
     * PqRounds Lloyd rounds. Init is a PqM·PqKs-row bounded collect,
     * kept cid-ascending per sub (the scalaTopK tie-rule contract). */
-  private def pqCodebook(sv: DataFrame)
+  private[queries] def pqCodebook(sv: DataFrame)
       : Map[Int, Array[(Long, Array[Double])]] = {
     val cb0: Map[Int, Array[(Long, Array[Double])]] = sv.filter(col("vec_id") < PqKs)
       .select(col("sub"), col("vec_id").as("cid"), col("sv").as("ce"))
@@ -1207,29 +1139,18 @@ object Similarity {
   /** Per-query ADC distance tables: the query sample's exact
     * subvectors against all per-sub centroids — (qid, sub, cid, d26),
     * 8·16 rows per query. ONE definition shared by q54 and q55 (the
-    * same one-definition rule as the SQL chains). Compiled loop over
-    * the driver-side codebook — same round6 squared-distance fold as
-    * the Column form it replaces. */
-  private def pqQueryTables(sv: DataFrame,
+    * same one-definition rule as the SQL chains). The 128-row codebook
+    * joins as a local relation, whose exact size lets the planner
+    * broadcast it unhinted. */
+  private[queries] def pqQueryTables(sv: DataFrame,
       cents: Map[Int, Array[(Long, Array[Double])]]): DataFrame = {
     val spark = sv.sparkSession
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(cents)
+    val cb = cents.toSeq.flatMap { case (sub, cells) => cells.map { case (cid, ce) => (sub, cid, ce) } }
+      .toDF("sub", "cid", "ce")
     sv.filter(col("vec_id") % 100 === 4)
-      .select(col("vec_id").as("qid"), col("sub"), col("sv"))
-      .as[(Long, Int, Array[Double])]
-      .mapPartitions { it =>
-        val cs = bc.value
-        it.flatMap { case (qid, sub, v) =>
-          cs(sub).iterator.map { case (cid, ce) =>
-            var ss = 0.0
-            var i = 0
-            while (i < v.length) { val d0 = v(i) - ce(i); ss += d0 * d0; i += 1 }
-            (qid, sub, cid, round6(ss))
-          }
-        }
-      }
-      .toDF("qid", "sub", "cid", "d26")
+      .join(cb, Seq("sub"))
+      .select(col("vec_id").as("qid"), col("sub"), col("cid"), sqDist6(col("sv"), col("ce")).as("d26"))
   }
 
   /** Scored recall rows (qid, hits, recall5): predicted top-5 against

@@ -7,6 +7,13 @@ import org.apache.spark.sql.{Row, SparkSession}
 
 object SparkTestSession {
   lazy val spark: SparkSession = Sessions("graft-test")
+
+  /** SHA-256 of the rows' string forms, sorted: an order-free digest. */
+  def rowsDigest(rows: Array[Row]): String = {
+    val md = MessageDigest.getInstance("SHA-256")
+    rows.map(_.toString).sorted.foreach(r => md.update((r + "\n").getBytes(UTF_8)))
+    md.digest().map("%02x".format(_)).mkString
+  }
 }
 
 class QueriesSpec extends AnyFunSuite {
@@ -17,8 +24,9 @@ class QueriesSpec extends AnyFunSuite {
   private val mayBeEmpty = Set("q04_antijoin_resume", "q22_jaccard_pairs")
 
   /** SHA-256 of the sorted rows at sf0.001 for the queries that score
-    * cosine pairs, frozen from the per-query typed-map kernels that
-    * `Cos6` replaced: the rewrite must keep every row bit-identical. */
+    * cosine pairs or squared distances, frozen from the per-query
+    * typed-map kernels that `Cos6` and `SqDist6` replaced: the rewrites
+    * must keep every row bit-identical. */
   private val frozenDigests = Map(
     "q23_cosine_topk" ->
       "3d15e2176382186801d65093949e33c44fc3d1890e1d39dbae4e9b2aea93d678",
@@ -37,20 +45,16 @@ class QueriesSpec extends AnyFunSuite {
     "q54_pq_recall" ->
       "74e82a3d84dd069fc6b009f0b8f39e060dd10684808b435f6e3efa1f0045c145",
     "q55_ivfpq_recall" ->
-      "2579fdd7e2b00c23e57b63deb449a117cca12eb0bad9fa8e5867ad25fa728bdf")
-
-  private def rowsDigest(rows: Array[Row]): String = {
-    val md = MessageDigest.getInstance("SHA-256")
-    rows.map(_.toString).sorted.foreach(r => md.update((r + "\n").getBytes(UTF_8)))
-    md.digest().map("%02x".format(_)).mkString
-  }
+      "2579fdd7e2b00c23e57b63deb449a117cca12eb0bad9fa8e5867ad25fa728bdf",
+    "q41_twolevel_assign" ->
+      "cfd02f5c55142cfdf28f96fbbeb7b9036ebda2e078cc3c38228abc6eac75ed66")
 
   test("every registered query runs and returns rows at sf0.001") {
     val drifted = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       val df = fn(spark, sf)
       // a frozen query is collected instead of counted, so it still runs once
       val (n, got) = frozenDigests.get(name) match {
-        case Some(_) => val rows = df.collect(); (rows.length.toLong, Some(rowsDigest(rows)))
+        case Some(_) => val rows = df.collect(); (rows.length.toLong, Some(SparkTestSession.rowsDigest(rows)))
         case None => (df.count(), None)
       }
       withClue(s"$name:") { assert(n > 0 || mayBeEmpty.contains(name)) }

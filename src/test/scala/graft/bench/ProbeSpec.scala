@@ -34,4 +34,14 @@ class ProbeSpec extends AnyFunSuite {
     assert(headers(c).exists(_.startsWith("==== execution 1 FAILED: action=")), c.text)
     assert(c.text.contains("probe test failure"))
   }
+
+  test("plans: two plannings of one query render the same normalised plan") {
+    def render() = SparkEntry.queries("q42_band_claims")(spark, "/root/testdata/sf0.001")
+      .queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
+    val (a, b) = (render(), render())
+    assert(a != b, "expression ids differ between plannings")
+    assert(Probe.normalised(a) == Probe.normalised(b))
+    assert("#\\d|plan_id=|lambda \\w+_\\d|Lambda\\$\\d|Lambda/0x".r.findFirstIn(Probe.normalised(a)).isEmpty,
+      Probe.normalised(a))
+  }
 }

@@ -75,4 +75,25 @@ class SimilaritySpec extends AnyFunSuite {
     val atCap = spark.range(4).selectExpr("id AS cid", "array(CAST(id AS DOUBLE)) AS ce")
     assert(Similarity.collectCents(atCap).length == 4)
   }
+
+  /** The recall queries reduce their scored pairs to (qid, hits, recall5)
+    * rows, which a 6th-decimal drift in cos6 or d26 leaves equal; these
+    * digests of the scored intermediates at sf0.001 make it show. */
+  test("scored pairs and ADC distance tables keep their frozen row digests") {
+    val e = spark.read.parquet(s"$sf/embeddings.parquet")
+    val assigned = Similarity.assignedDf(e)
+    val sv = Similarity.pqSubRows(Similarity.normRows(e))
+    val got = Seq(
+      "probedPairs" -> Similarity.probedPairs(assigned),
+      "exactTop5" -> Similarity.exactTop5(assigned),
+      "pqQueryTables" -> Similarity.pqQueryTables(sv, Similarity.pqCodebook(sv)))
+      .map { case (name, df) => name -> SparkTestSession.rowsDigest(df.collect()) }.toMap
+    assert(got == Map(
+      "probedPairs" ->
+        "e1fe2eef06953c1d93a3562800195060deb685b3f3287e6450e1d1aeb4f17f34",
+      "exactTop5" ->
+        "ffc8b37a81a002b929147f0986c38fe73b7301619a12913d55dfa5332107f856",
+      "pqQueryTables" ->
+        "884c9e2fd1c4602de990b519ba308ea476d84ef085d2b224f660faf69a7bbde7"))
+  }
 }
